@@ -30,7 +30,7 @@ import os
 import shutil
 import uuid
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from sagan_spark.rules.model import Rule
@@ -81,42 +81,36 @@ atexit.register(cleanup_staged)
 
 
 def stage_frame(df: DataFrame, name: str = "stage") -> DataFrame:
-    """Materialize a frame once and return a scan over it.
-
-    Default mode writes a staged parquet snapshot and re-reads it (the
-    cluster-scale shape: an Iceberg staging table).  ``persist`` mode
-    keeps the r1 in-memory cache.  Measured at 320k pages/local[32]:
-    the persist barrier fed 5 downstream branch reads through the block
-    -manager cache — branch stages racing to materialize the same
-    blocks serialized on cache locks, and the cached blocks promoted to
-    old gen, driving 30s+ ParallelGC full collections on later runs.
-    The staged write is an explicit barrier with none of that: one
-    parallel write, then plain splittable scans.
+    """Materialize a frame once as a staged parquet snapshot and return a
+    scan over it (the cluster-scale shape: an Iceberg staging table).
+    One parallel write, then plain splittable scans for every downstream
+    branch.  (An in-memory ``persist()`` barrier lost this A/B at 320k
+    pages/local[32]: branch stages raced on block-manager cache locks,
+    and the cached blocks promoted to old gen, driving 30s+ ParallelGC
+    full collections on later runs.)
     """
-    mode = os.environ.get("SPARK_GRAFT_GATE_STAGING", "parquet")
-    if mode == "persist":
-        return df.persist()
     path = os.path.join(_stage_base(), f"{name}-{uuid.uuid4().hex}")
     df.write.mode("overwrite").parquet(path)
     return df.sparkSession.read.parquet(path)
 
-TRACK_CASE = {
-    "by_src": "src_ip",
-    "by_dst": "dst_ip",
-    "by_username": "source",
-    "ip_pair": None,  # concat handled specially
-}
 
-
-def track_key_col(track_col: str) -> Column:
-    t = F.col(track_col)
-    return (
-        F.when(t == "by_src", F.col("src_ip"))
-        .when(t == "by_dst", F.col("dst_ip"))
-        .when(t == "by_username", F.col("source"))
-        .when(t == "ip_pair", F.concat_ws(">", "src_ip", "dst_ip"))
-        .otherwise(F.col("domain"))  # by_domain / by_string
-    )
+def track_key_col(track: str | Column) -> Column:
+    """Gate key for ``track``: a literal track name (the key column
+    itself), or a Column holding each row's track (a CASE over the same
+    map — the batch gates read tracks from the joined gate config)."""
+    keys = {
+        "by_src": F.col("src_ip"),
+        "by_dst": F.col("dst_ip"),
+        "by_username": F.col("source"),
+        "ip_pair": F.concat_ws(">", "src_ip", "dst_ip"),
+    }
+    default = F.col("domain")  # by_domain / by_string
+    if isinstance(track, str):
+        return keys.get(track, default)
+    key = F
+    for name, col in keys.items():
+        key = key.when(track == name, col)
+    return key.otherwise(default)
 
 
 def track_key_sql(track_expr: str, prefix: str = "") -> str:
@@ -129,78 +123,67 @@ def track_key_sql(track_expr: str, prefix: str = "") -> str:
     )
 
 
-def gates_cfg_df(spark: SparkSession, rules: list[Rule]) -> DataFrame:
-    rows = [
-        (
-            r.sid,
-            r.after.track if r.after else None,
-            r.after.count if r.after else None,
-            r.after.seconds if r.after else None,
-            r.threshold.ttype if r.threshold else None,
-            r.threshold.track if r.threshold else None,
-            r.threshold.count if r.threshold else None,
-            r.threshold.seconds if r.threshold else None,
-        )
-        for r in rules
-    ]
-    return spark.createDataFrame(
-        rows,
+def _cfg_row(r: Rule) -> tuple:
+    """(sid, after_track, after_count, after_seconds, th_type, th_track,
+    th_count, th_seconds) — one gate-config row, shared by the engine's
+    broadcast dim and the DuckDB twin's VALUES list."""
+    a, t = r.after, r.threshold
+    return (
+        r.sid,
+        a.track if a else None,
+        a.count if a else None,
+        a.seconds if a else None,
+        t.ttype if t else None,
+        t.track if t else None,
+        t.count if t else None,
+        t.seconds if t else None,
+    )
+
+
+def with_gate_keys(df: DataFrame, rules: list[Rule]) -> DataFrame:
+    """Join each alert row to its rule's gate config (built from
+    ``rules``) and add the ``after_key`` / ``th_key`` track columns.
+
+    Exchange sharing: when no rule carries BOTH an after and a
+    threshold gate with *different* track keys (the overwhelmingly
+    common case), both keys are the single (sid, gate_key) pair —
+    rolling frames share one exchange + sort, and the tumbling `limit`
+    window's (sid, gate_key, win_id) clustering is subset-satisfied by
+    the same exchange (re-sort only, no second shuffle)."""
+    cfg = df.sparkSession.createDataFrame(
+        [_cfg_row(r) for r in rules],
         schema=(
             "sid long, after_track string, after_count int, after_seconds int, "
             "th_type string, th_track string, th_count int, th_seconds int"
         ),
     )
-
-
-def split_window_gates(
-    df: DataFrame, cfg: DataFrame, rules: list[Rule], stage: bool = True
-) -> tuple[DataFrame | None, DataFrame, set[int]]:
-    """df = exploded+extracted hits.  Returns ``(win, rest, win_sids)``:
-    ``win`` = rows of window-gated rules surviving their after/threshold
-    gates (None when no rule carries a window gate), ``rest`` = rows of
-    ungated rules, passed through untouched.  One Window spec per
-    distinct S, shared (sid, key) partitioning.
-
-    The split form exists so the bit-test stage (gates/xbits.py
-    ``apply_gates``) can source each of its branches from the SAME
-    staged snapshot this function writes — collapsing the pre-r4
-    pregate+bitbase double staging into one barrier.  When ``stage``
-    and gated rules exist, the keyed stream is staged ONCE here and
-    both returned frames are scans over that snapshot; when no rule is
-    window-gated, ``rest`` is returned UNSTAGED (the caller owns the
-    barrier decision).
-
-    Shuffle-volume discipline: windows partition by sid, so rows of
-    ungated rules can never influence a gated rule's counts — they skip
-    the exchange entirely (measured ~22/25 of the alert stream).
-
-    Exchange sharing: when no rule carries BOTH an after and a
-    threshold gate with *different* track keys (the overwhelmingly
-    common case), every window partitions by the single
-    (sid, gate_key) pair — rolling frames share one exchange + sort,
-    and the tumbling `limit` window's (sid, gate_key, win_id)
-    clustering is subset-satisfied by the same exchange (re-sort only,
-    no second shuffle)."""
+    df = df.join(F.broadcast(cfg), "sid", "left")
     unified = all(
         not (r.after and r.threshold) or r.after.track == r.threshold.track
         for r in rules
     )
-    df = df.join(F.broadcast(cfg), "sid", "left")
     if unified:
-        gate_track = F.coalesce("after_track", "th_track")
-        df = df.withColumn("_gt", gate_track)
-        key = track_key_col("_gt")
-        df = df.withColumn("after_key", key).withColumn("th_key", F.col("after_key"))
-        df = df.drop("_gt")
-    else:
-        df = df.withColumn("after_key", track_key_col("after_track")).withColumn(
-            "th_key", track_key_col("th_track")
-        )
+        df = df.withColumn("_gt", F.coalesce("after_track", "th_track"))
+        df = df.withColumn("after_key", track_key_col(F.col("_gt")))
+        return df.withColumn("th_key", F.col("after_key")).drop("_gt")
+    df = df.withColumn("after_key", track_key_col(F.col("after_track")))
+    return df.withColumn("th_key", track_key_col(F.col("th_track")))
+
+
+def split_window_gates(
+    df: DataFrame, rules: list[Rule]
+) -> tuple[DataFrame, DataFrame]:
+    """df = the staged :func:`with_gate_keys` stream.  Returns
+    ``(win, rest)``: ``win`` = rows of window-gated rules surviving
+    their after/threshold gates, ``rest`` = rows of every other rule,
+    passed through untouched.  One Window spec per distinct S, shared
+    (sid, key) partitioning.  Stages nothing: the caller
+    (gates/xbits.py ``apply_gates``) owns the barrier.
+
+    Shuffle-volume discipline: windows partition by sid, so rows of
+    ungated rules can never influence a gated rule's counts — they skip
+    the exchange entirely (measured ~22/25 of the alert stream)."""
     gated_sids = [r.sid for r in rules if r.after or r.threshold]
-    if not gated_sids:
-        return None, df, set()
-    if stage:
-        df = stage_frame(df, "pregate")
     rest = df.where(~F.col("sid").isin(gated_sids))
     df = df.where(F.col("sid").isin(gated_sids))
     # NARROW window rows (r4 session 2, same shape as the bit sweeps):
@@ -277,15 +260,7 @@ def split_window_gates(
     passed_keys = (
         df.withColumn("_keep", keep).where(F.col("_keep")).select("url", "sid")
     )
-    gated = wide.join(passed_keys, ["url", "sid"], "leftsemi")
-    return gated, rest, set(gated_sids)
-
-
-def apply_window_gates(df: DataFrame, cfg: DataFrame, rules: list[Rule]) -> DataFrame:
-    """Union form of :func:`split_window_gates` (gated ∪ pass-through) —
-    the standalone window-gate operator."""
-    win, rest, _ = split_window_gates(df, cfg, rules)
-    return rest if win is None else win.unionByName(rest)
+    return wide.join(passed_keys, ["url", "sid"], "leftsemi"), rest
 
 
 def window_gates_sql(rules: list[Rule], rel: str = "enriched") -> str:
@@ -347,22 +322,7 @@ def gates_cfg_values_sql(rules: list[Rule]) -> str:
         return f"'{v}'"
 
     rows = ", ".join(
-        "("
-        + ", ".join(
-            lit(v)
-            for v in (
-                r.sid,
-                r.after.track if r.after else None,
-                r.after.count if r.after else None,
-                r.after.seconds if r.after else None,
-                r.threshold.ttype if r.threshold else None,
-                r.threshold.track if r.threshold else None,
-                r.threshold.count if r.threshold else None,
-                r.threshold.seconds if r.threshold else None,
-            )
-        )
-        + ")"
-        for r in rules
+        "(" + ", ".join(lit(v) for v in _cfg_row(r)) + ")" for r in rules
     )
     return (
         f"(VALUES {rows}) AS gcfg(sid, after_track, after_count, after_seconds, "

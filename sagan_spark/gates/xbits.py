@@ -24,12 +24,16 @@ bounded look-back tail — see runner/ checkpoint notes).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from sagan_spark.gates.windows import track_key_col, track_key_sql
+from sagan_spark.gates.windows import (
+    split_window_gates,
+    stage_frame,
+    track_key_col,
+    track_key_sql,
+    with_gate_keys,
+)
 from sagan_spark.rules.model import Rule
 
 
@@ -73,7 +77,7 @@ def bit_events(df: DataFrame, writes_df: DataFrame) -> DataFrame:
     ev = df.join(F.broadcast(writes_df), "sid", "inner")
     return ev.select(
         F.col("name"),
-        track_key_col("track").alias("key"),
+        track_key_col(F.col("track")).alias("key"),
         F.col("warc_epoch"),
         F.col("url"),
         F.col("sid").alias("esid"),
@@ -82,44 +86,48 @@ def bit_events(df: DataFrame, writes_df: DataFrame) -> DataFrame:
     )
 
 
-def apply_gates(
-    df: DataFrame, cfg: DataFrame, rules: list[Rule], spark: SparkSession
-) -> DataFrame:
-    """Window gates + bit tests behind ONE staging barrier (the r4
-    collapse of the pre-r4 pregate+bitbase double staging).
+def apply_gates(df: DataFrame, rules: list[Rule]) -> DataFrame:
+    """The gate stage: after/threshold windows, then xbits/flexbits
+    tests, over the alert stream ``df``.  Rows of rules carrying no
+    gate pass through untouched; every output row carries the gate
+    config and key columns of :func:`with_gate_keys`.
 
-    ``split_window_gates`` stages the full keyed alert stream once and
-    hands back (window-gated rows, pass-through rows) as scans over
-    that snapshot.  Each bit branch (events / isset testers / count
-    testers / pass-through) then sources its sid subset directly from
-    the snapshot — the window computation re-runs only inside branches
-    whose sids are themselves window-gated.  When window-gated sids and
-    bit-op sids are disjoint (the common ruleset shape, and the
-    fixture's), the windows run exactly once (in the pass-through
-    branch) and NO second staging write happens; when they overlap, the
-    (small) window-gated subset is staged so each overlapping branch
-    reads a scan instead of re-sorting."""
-    from sagan_spark.gates.windows import split_window_gates, stage_frame
-
+    ONE staging barrier: the keyed alert stream is staged once when
+    some rule has a window gate or a bit test.  Every branch (window-
+    gated rows, pass-through rows, bit events, isset testers, count
+    testers) then sources its sid subset from that snapshot instead of
+    recomputing the upstream match plan.  The window computation
+    re-runs only inside branches whose sids are themselves window-
+    gated: when those sids and the bit-op sids are disjoint (the common
+    ruleset shape, and the fixture's), the windows run exactly once;
+    when they overlap, the (small) window-gated subset is staged too so
+    each overlapping branch reads a scan instead of re-sorting."""
     writes, tests = bit_ops_rows(rules)
     counts = bit_count_rows(rules)
-    has_bits = bool(tests or counts)
-    # probe-memo identity is the PRE-staging plan: the staged snapshot's
-    # path changes per run but its contents derive deterministically
-    # from this plan, so the hottest-group count is a pure function of it
+    _reject_mixed_bit_families(tests, counts)
+    # probe-memo identity: the PRE-staging plan plus every spec the
+    # probed stream depends on.  The staged snapshot's path changes per
+    # run, but its contents derive deterministically from these.
     probe_key = _plan_key(df) if counts else None
-    win, rest, win_sids = split_window_gates(df, cfg, rules, stage=True)
-    if not has_bits:
+    if probe_key is not None:
+        probe_key = (
+            probe_key,
+            tuple(counts),
+            tuple(writes),
+            tuple((r.sid, r.after, r.threshold) for r in rules),
+        )
+    win_sids = {r.sid for r in rules if r.after or r.threshold}
+    df = with_gate_keys(df, rules)
+    if not (win_sids or tests or counts):
+        return df
+    df = stage_frame(df, "gates")
+    win, rest = split_window_gates(df, rules) if win_sids else (None, df)
+    if not (tests or counts):
         return rest if win is None else win.unionByName(rest)
-    if win is None:
-        # no window gates → nothing staged the stream yet; the bit
-        # branches still need the barrier (each would otherwise
-        # recompute the whole upstream match plan)
-        rest = stage_frame(rest, "bitbase")
-    bit_sids = (
-        {w[0] for w in writes} | {t[0] for t in tests} | {c[0] for c in counts}
-    )
-    if win is not None and (win_sids & bit_sids):
+    writer_sids = {w[0] for w in writes}
+    tester_sids = {t[0] for t in tests}
+    count_sids = {c[0] for c in counts}
+    if win_sids & (writer_sids | tester_sids | count_sids):
         # ≥2 branches would re-run the window sort — stage the (small)
         # window-gated subset once instead
         win = stage_frame(win, "wingate")
@@ -136,7 +144,7 @@ def apply_gates(
             parts = []
             in_win = sorted(set(sids) & win_sids)
             in_rest = sorted(set(sids) - win_sids)
-            if win is not None and in_win:
+            if in_win:
                 parts.append(win.where(F.col("sid").isin(in_win)))
             if in_rest:
                 parts.append(rest.where(F.col("sid").isin(in_rest)))
@@ -147,37 +155,25 @@ def apply_gates(
             out = out.unionByName(p)
         return out
 
-    return _bit_tests_core(source, rules, spark, probe_key=probe_key)
-
-
-def apply_bit_tests(
-    df: DataFrame, rules: list[Rule], spark: SparkSession, persist: bool = True
-) -> DataFrame:
-    """Standalone bit-test operator over an already-gated stream:
-    filter tester-rule rows by their isset/isnotset/count conditions;
-    non-tester rows pass through untouched.  (The flagship pipeline
-    uses :func:`apply_gates`, which shares the window stage's staging
-    barrier instead of writing its own.)
-
-    ``persist=True`` stages ``df`` once: it feeds several branches
-    (events, testers, pass-through), and without a barrier each branch
-    would recompute the entire upstream plan."""
-    writes, tests = bit_ops_rows(rules)
-    counts = bit_count_rows(rules)
-    if not tests and not counts:
-        return df
-    probe_key = _plan_key(df) if counts else None
-    if persist:
-        from sagan_spark.gates.windows import stage_frame
-
-        df = stage_frame(df, "bitbase")
-
-    def source(sids, exclude: bool = False) -> DataFrame:
-        sids = list(sids)
-        cond = F.col("sid").isin(sids)
-        return df.where(~cond if exclude else cond)
-
-    return _bit_tests_core(source, rules, spark, probe_key=probe_key)
+    spark = df.sparkSession
+    writes_df = spark.createDataFrame(
+        writes, schema="sid long, name string, track string, op string, expire int"
+    )
+    out = source(tester_sids | count_sids, exclude=True)
+    if counts:
+        out = out.unionByName(
+            _apply_count_tests(
+                source(count_sids), source(writer_sids), counts, writes_df, spark,
+                probe_key=probe_key,
+            )
+        )
+    if tests:
+        out = out.unionByName(
+            _apply_isset_tests(
+                source(tester_sids), source(writer_sids), tests, writes_df, spark
+            )
+        )
+    return out
 
 
 def _plan_key(df: DataFrame) -> int | None:
@@ -190,7 +186,7 @@ def _plan_key(df: DataFrame) -> int | None:
         return None
 
 
-# hottest-(name, key)-group row count per (upstream plan, count specs)
+# hottest-(name, key)-group row count per (upstream plan, gate specs)
 # — see the auto-trigger block in _apply_count_tests
 _FLEXCOUNT_PROBE_CACHE: dict[tuple, int] = {}
 
@@ -201,12 +197,15 @@ def clear_flexcount_probe_cache() -> None:
     _FLEXCOUNT_PROBE_CACHE.clear()
 
 
-def _bit_tests_core(
-    source, rules: list[Rule], spark: SparkSession, probe_key: int | None = None
+def _apply_isset_tests(
+    tester_src: DataFrame,
+    event_src: DataFrame,
+    tests: list[tuple],
+    writes_df: DataFrame,
+    spark: SparkSession,
 ) -> DataFrame:
-    """Shared bit-test plan builder.  ``source(sids, exclude=False)``
-    returns the gated alert rows for a sid set (all frames it returns
-    must share one schema).
+    """xbits ``isset`` / ``isnotset`` testers: the passing rows of
+    ``tester_src``.
 
     Scale-critical formulation: a naive (events × testers) join on
     (name, key) is O(E·T) **per key** and melts down on hot Zipf
@@ -218,25 +217,6 @@ def _bit_tests_core(
     one shuffle + sort, linear per key, hot keys are just longer sorted
     runs (no pairwise blowup).  The DuckDB oracle keeps the join+
     row_number formulation as an independent cross-check."""
-    writes, tests = bit_ops_rows(rules)
-    counts = bit_count_rows(rules)
-    _reject_mixed_bit_families(tests, counts)
-    writes_df = spark.createDataFrame(
-        writes, schema="sid long, name string, track string, op string, expire int"
-    )
-    writer_sids = {w[0] for w in writes}
-    tester_sids = {t[0] for t in tests}
-    count_sids = {c[0] for c in counts}
-    rest = source(tester_sids | count_sids, exclude=True)
-    if counts:
-        rest = rest.unionByName(
-            _apply_count_tests(
-                source(count_sids), source(writer_sids), counts, writes_df, spark,
-                probe_key=probe_key,
-            )
-        )
-    if not tests:
-        return rest
     tests_df = spark.createDataFrame(
         tests, schema="sid long, name string, track string, test_op string"
     )
@@ -254,8 +234,6 @@ def _bit_tests_core(
     # shuffles on unskewed keys.  (This is NOT the r3 melt revisited:
     # that was a time-range join producing O(sets×testers) rows per
     # key; this is an equi semi-join on unique keys.)
-    event_src = source(writer_sids)
-    tester_src = source(tester_sids)
     events = bit_events(event_src, writes_df).select(
         F.col("name").alias("bname"),
         F.col("key").alias("bkey"),
@@ -277,7 +255,7 @@ def _bit_tests_core(
         .join(F.broadcast(tests_df), "sid", "inner")
         .select(
             F.col("name").alias("bname"),
-            track_key_col("track").alias("bkey"),
+            track_key_col(F.col("track")).alias("bkey"),
             F.col("warc_epoch"),
             F.col("url"),
             F.lit(1).alias("kind"),
@@ -320,8 +298,7 @@ def _bit_tests_core(
         .where(F.col("_all_ok") == 1)
         .select("url", F.col("tsid").alias("sid"))
     )
-    passed = tester_src.join(passed_keys, ["url", "sid"], "leftsemi")
-    return rest.unionByName(passed)
+    return tester_src.join(passed_keys, ["url", "sid"], "leftsemi")
 
 
 def _apply_count_tests(
@@ -330,7 +307,7 @@ def _apply_count_tests(
     counts: list[tuple],
     writes_df: DataFrame,
     spark: SparkSession,
-    probe_key: int | None = None,
+    probe_key: tuple | None = None,
 ) -> DataFrame:
     """flexbits ``count`` testers ([U] src/flexbit.c counter form).
 
@@ -377,7 +354,7 @@ def _apply_count_tests(
     # scalar keys instead of the full 17-column payload struct.
     tester_rows = tester_src.join(F.broadcast(cdf), "sid", "inner").select(
         F.col("name").alias("cname"),
-        track_key_col("track").alias("ckey"),
+        track_key_col(F.col("track")).alias("ckey"),
         F.col("warc_epoch").alias("epoch"),
         F.lit(1).alias("k0"),
         F.col("url").alias("surl"),
@@ -434,50 +411,34 @@ def _apply_count_tests(
         )
     )
     stream = event_rows.unionByName(tester_rows)
-    mode = os.environ.get("SPARK_GRAFT_FLEXCOUNT_MODE", "auto")
-    if mode == "auto":
-        # hot-key trigger: one cheap stats job over the (payload-pruned)
-        # stream decides whether any single (name, key) group has
-        # outgrown one task's sort.  The columns scanned are tiny (the
-        # staged base is parquet, payload pruned away), and at 100× one
-        # Zipf-hot domain otherwise serializes the whole stage.
-        #
-        # The hottest-group count is MEMOIZED per (upstream-plan
-        # semantic hash, count specs): the probe is an eager one-row
-        # job at plan-build time, and a session that rebuilds the same
-        # pipeline over the same input (bench reps, repeated queries)
-        # re-paid its ~1 s of fixed latency for a deterministic answer.
-        # Same immutable-path contract as the IVF centroid memo
-        # (datapipe/similarity.py) — regenerating data IN PLACE at the
-        # same path must call clear_flexcount_probe_cache().
-        cache_key = None if probe_key is None else (probe_key, tuple(sorted(counts)))
-        max_group = _FLEXCOUNT_PROBE_CACHE.get(cache_key) if cache_key else None
-        if max_group is None:
-            stats = (
-                event_rows.select("cname", "ckey", "epoch")
-                .unionByName(tester_rows.select("cname", "ckey", "epoch"))
-                .groupBy("cname", "ckey")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .agg(
-                    F.max("n").alias("max_group"),
-                )
-                .first()
-            )
-            max_group = stats["max_group"] or 0
-            if cache_key is not None:
-                _FLEXCOUNT_PROBE_CACHE[cache_key] = max_group
-        mode = _pick_flexcount_plan(max_group)
-    global LAST_FLEXCOUNT_PLAN
-    LAST_FLEXCOUNT_PLAN = mode
-    if mode == "chunked":
-        withn = _chunked_running_sum(stream)
-    else:
-        w = (
-            Window.partitionBy("cname", "ckey")
-            .orderBy("epoch", "k0", "surl", "k1")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    # hot-key trigger: one cheap stats job over the (payload-pruned)
+    # stream decides whether any single (name, key) group has outgrown
+    # one task's sort.  The columns scanned are tiny (the staged base is
+    # parquet, payload pruned away), and at 100× one Zipf-hot domain
+    # otherwise serializes the whole stage.
+    #
+    # The hottest-group count is MEMOIZED per ``probe_key`` (upstream-
+    # plan semantic hash + count, writer and window-gate specs): the
+    # probe is an eager one-row job at plan-build time, and a session
+    # that rebuilds the same pipeline over the same input (bench reps,
+    # repeated queries) re-paid its ~1 s of fixed latency for a
+    # deterministic answer.  Same immutable-path contract as the IVF
+    # centroid memo (datapipe/similarity.py) — regenerating data IN
+    # PLACE at the same path must call clear_flexcount_probe_cache().
+    max_group = _FLEXCOUNT_PROBE_CACHE.get(probe_key) if probe_key else None
+    if max_group is None:
+        stats = (
+            event_rows.select("cname", "ckey", "epoch")
+            .unionByName(tester_rows.select("cname", "ckey", "epoch"))
+            .groupBy("cname", "ckey")
+            .agg(F.count(F.lit(1)).alias("n"))
+            .agg(F.max("n").alias("max_group"))
+            .first()
         )
-        withn = stream.withColumn("_n", F.sum("delta").over(w))
+        max_group = stats["max_group"] or 0
+        if probe_key is not None:
+            _FLEXCOUNT_PROBE_CACHE[probe_key] = max_group
+    withn = _running_count(stream, _pick_flexcount_plan(max_group))
     ok = (
         F.when(F.col("cmp") == "gt", F.col("_n") > F.col("cval"))
         .when(F.col("cmp") == "lt", F.col("_n") < F.col("cval"))
@@ -493,10 +454,6 @@ def _apply_count_tests(
     )
     return tester_src.join(passed_keys, ["url", "sid"], "leftsemi")
 
-
-# last plan `_apply_count_tests` chose ("single" | "chunked") — observable
-# for the trigger tests and for bench forensics
-LAST_FLEXCOUNT_PLAN: str | None = None
 
 # A (name, key) group beyond this row count escalates to the epoch-
 # chunked two-phase prefix sum.  r5 calibration (scripts/
@@ -524,30 +481,33 @@ FLEXCOUNT_TARGET_CHUNKS = 64
 
 def _pick_flexcount_plan(max_group: int) -> str:
     """Escalation trigger: 'chunked' iff the hottest (name, key) group
-    exceeds the single-task sort threshold (env-overridable)."""
-    thr = int(
-        os.environ.get("SPARK_GRAFT_FLEXCOUNT_CHUNK_ROWS", FLEXCOUNT_CHUNK_THRESHOLD)
-    )
-    return "chunked" if max_group > thr else "single"
+    exceeds the single-task sort threshold."""
+    return "chunked" if max_group > FLEXCOUNT_CHUNK_THRESHOLD else "single"
 
 
-def _chunked_running_sum(stream: DataFrame) -> DataFrame:
-    """Epoch-chunked two-phase prefix sum over the count stream — the
-    hot-key escalation ([U] no upstream analog; upstream's mmap counter
-    is inherently single-threaded per key).
+def _running_count(stream: DataFrame, plan: str) -> DataFrame:
+    """The count sweep: ``stream`` plus ``_n`` = running sum(delta) per
+    (name, key) under the total order (epoch, k0, surl, k1).
 
-    A single (name, key) window group lands in ONE task; for a Zipf-hot
-    key at 100× that task serializes the stage.  Phase 1 splits each
-    group into epoch chunks (epoch is the leading sort key, so equal
-    epochs never straddle a chunk) and computes the running sum WITHIN
-    (name, key, chunk) — parallel across chunks of the same hot key.
-    Phase 2 turns per-chunk totals into per-chunk offsets with a window
-    over the (tiny) chunk-totals frame and broadcast-joins them back:
-    global running sum = local running sum + preceding-chunks offset.
-
-    Cost: one extra small shuffle (chunk totals) + a broadcast join —
-    the A/B'd overhead that makes this the escalation path, not the
-    default (see FLEXCOUNT_CHUNK_THRESHOLD)."""
+    ``single``: one window per (name, key) group.  ``chunked``: the
+    epoch-chunked two-phase prefix sum — the hot-key escalation ([U] no
+    upstream analog; upstream's mmap counter is inherently single-
+    threaded per key).  A single (name, key) window group lands in ONE
+    task; for a Zipf-hot key at 100× that task serializes the stage.
+    Phase 1 splits each group into epoch chunks (epoch is the leading
+    sort key, so equal epochs never straddle a chunk) and computes the
+    running sum WITHIN (name, key, chunk) — parallel across chunks of
+    the same hot key.  Phase 2 turns per-chunk totals into per-chunk
+    offsets with a window over the (tiny) chunk-totals frame and
+    broadcast-joins them back: global running sum = local running sum
+    + preceding-chunks offset.  Cost: one extra small shuffle (chunk
+    totals) + a broadcast join — the A/B'd overhead that makes this the
+    escalation path, not the default (see FLEXCOUNT_CHUNK_THRESHOLD)."""
+    order = ("epoch", "k0", "surl", "k1")
+    running = (Window.unboundedPreceding, Window.currentRow)
+    if plan == "single":
+        w = Window.partitionBy("cname", "ckey").orderBy(*order).rowsBetween(*running)
+        return stream.withColumn("_n", F.sum("delta").over(w))
     bounds = stream.agg(
         F.min("epoch").alias("emin"), F.max("epoch").alias("emax")
     ).first()
@@ -559,9 +519,7 @@ def _chunked_running_sum(stream: DataFrame) -> DataFrame:
         "_chunk", ((F.col("epoch") - F.lit(int(emin))) / F.lit(width)).cast("long")
     )
     w_local = (
-        Window.partitionBy("cname", "ckey", "_chunk")
-        .orderBy("epoch", "k0", "surl", "k1")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        Window.partitionBy("cname", "ckey", "_chunk").orderBy(*order).rowsBetween(*running)
     )
     chunked = chunked.withColumn("_ls", F.sum("delta").over(w_local))
     totals = chunked.groupBy("cname", "ckey", "_chunk").agg(
@@ -597,7 +555,7 @@ def bit_values_sql(rules: list[Rule]) -> tuple[str, str]:
 
 
 def bit_tests_sql(rules: list[Rule], rel: str = "wgated") -> str:
-    """DuckDB twin of :func:`apply_bit_tests`: returns the full SQL for
+    """DuckDB twin of the bit-test half of :func:`apply_gates`: returns the full SQL for
     the bit-gated relation (non-testers UNION passing isset/isnotset
     testers UNION passing flexbits-count testers)."""
     writes, tests = bit_ops_rows(rules)

@@ -22,7 +22,6 @@ from sagan_spark.enrich.enrich import (
     with_classification,
     with_geo,
 )
-from sagan_spark.gates.windows import apply_window_gates, gates_cfg_df
 from sagan_spark.gates.xbits import apply_gates
 from sagan_spark.parse.extract import (
     apply_rule_extraction,
@@ -57,7 +56,6 @@ class Pipeline:
         self.rules = list(rules) if rules is not None else list(fixture_rules())
         self.comp = CompiledRules(self.rules)
         self.cfg = rule_config_df(spark, self.rules)
-        self.gcfg = gates_cfg_df(spark, self.rules)
         self.cls = classification_df(spark)
         self.geo = geo_dim_df(spark, geo_rows())
         self.pmap = proto_map_df(spark)
@@ -105,7 +103,7 @@ class Pipeline:
 
     # columns the gate + routing stages actually need — everything else
     # (extraction scratch, cfg arrays, defaults) is dead weight that the
-    # persist() barriers would otherwise carry through every shuffle
+    # staging barrier would otherwise write and every shuffle carry
     GATE_COLS = [
         "url",
         "domain",
@@ -127,24 +125,18 @@ class Pipeline:
     ]
 
     def window_gated(self, pages: DataFrame) -> DataFrame:
+        """Alert stream after the after/threshold gates only (bit tests
+        not applied): rows of rules without a window gate pass through."""
         pruned = self.enriched(pages).select(*self.GATE_COLS)
-        return apply_window_gates(pruned, self.gcfg, self.rules)
+        return apply_gates(pruned, [r for r in self.rules if r.after or r.threshold])
 
     def gated(self, pages: DataFrame) -> DataFrame:
-        # ONE staging barrier for the whole gate family (r4): the keyed
-        # alert stream is staged once inside split_window_gates, and
-        # every bit branch sources its sid subset straight from that
-        # snapshot.  (r1-r3 history: an in-memory persist barrier lost
-        # to cache-lock races; the r3 fix staged TWICE — pregate AND the
-        # window-gated stream before the bit join-back — writing the
-        # full alert stream to tmpfs two times per run.  Window-gated
-        # sids and bit sids are disjoint in typical rulesets, so the
-        # second write bought nothing: apply_gates now recomputes the
-        # window sort only in branches that actually contain window-
-        # gated sids, and stages the small gated subset iff the sid
-        # sets overlap.)
+        # ONE staging barrier for the whole gate family: apply_gates
+        # stages the keyed alert stream once, and every window and bit
+        # branch sources its sid subset from that snapshot (see its
+        # docstring for the overlap-only second write).
         pruned = self.enriched(pages).select(*self.GATE_COLS)
-        return apply_gates(pruned, self.gcfg, self.rules, self.spark)
+        return apply_gates(pruned, self.rules)
 
     def routed(self, pages: DataFrame) -> DataFrame:
         """Alert stream with routing metadata (K7): every gated alert

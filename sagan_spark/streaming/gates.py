@@ -20,23 +20,13 @@ gate's own window; groups shard across executors by the same
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from sagan_spark.gates.windows import track_key_col
 
 OUT_SCHEMA = "url string, domain string, warc_epoch long, sid long"
 STATE_SCHEMA = "epochs array<long>"
-
-
-def gate_key_col(track: str) -> Column:
-    if track == "by_src":
-        return F.col("src_ip")
-    if track == "by_dst":
-        return F.col("dst_ip")
-    if track == "by_username":
-        return F.col("source")
-    if track == "ip_pair":
-        return F.concat_ws(">", "src_ip", "dst_ip")
-    return F.col("domain")  # by_domain / by_string
 
 
 def _rolling_fn(count: int, seconds: int, mode: str):
@@ -46,7 +36,7 @@ def _rolling_fn(count: int, seconds: int, mode: str):
     import pandas as pd
 
     def fn(key, pdf_iter, state):
-        buf = list(state.get()[0]) if state.exists else []
+        buf = list(state.get[0]) if state.exists else []
         frames = list(pdf_iter)
         rows = pd.concat(frames, ignore_index=True)
         rows = rows.sort_values(["warc_epoch", "url"], ignore_index=True)
@@ -69,7 +59,8 @@ def _apply(
 ) -> DataFrame:
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    keyed = hits.where(F.col("sid") == sid).withColumn("gate_key", gate_key_col(track))
+    keyed = hits.where(F.col("sid") == sid)
+    keyed = keyed.withColumn("gate_key", track_key_col(track))
     return keyed.groupBy("sid", "gate_key").applyInPandasWithState(
         fn,
         outputStructType=OUT_SCHEMA,
@@ -119,7 +110,7 @@ def _bit_fn():
         lat: dict[str, tuple[int, str, int | None]] = {}
         exps: dict[str, list[int]] = {}
         if state.exists:
-            lat_raw, exp_raw = state.get()
+            lat_raw, exp_raw = state.get
             for s in lat_raw or []:
                 nm, ep, op, ex = s.split(_SEP)
                 lat[nm] = (int(ep), op, None if ex == "-" else int(ex))
@@ -205,9 +196,11 @@ def xbits_gate_stream(hits: DataFrame, rules) -> DataFrame:
       * a rule whose tests span SEVERAL names gets a COMPOSITE group
         ("\\x00multi:<sid>", key): its tester rows AND a duplicate of
         every relevant writer's rows ride that group, whose state holds
-        per-name slots — ALL tests must share one track (differing
-        tracks would need a cross-group join the state store doesn't
-        have; rejected loudly).
+        per-name slots.
+
+    Either way ALL of a rule's tests must share one track: tests keyed
+    by differing tracks would need a cross-group join the state store
+    doesn't have, so they are rejected loudly (batch-only).
 
     A tester row carries ALL of its rule's test specs in ``cmps`` and
     is emitted iff EVERY spec passes — the streaming twin of the batch
@@ -244,7 +237,7 @@ def xbits_gate_stream(hits: DataFrame, rules) -> DataFrame:
     def writer_branch(group: str, sid: int, name: str, track: str, op: str, expire):
         return hits.where(F.col("sid") == sid).select(
             F.lit(group).alias("bname"),
-            gate_key_col(track).alias("bkey"),
+            track_key_col(track).alias("bkey"),
             "warc_epoch",
             "url",
             "domain",
@@ -259,7 +252,7 @@ def xbits_gate_stream(hits: DataFrame, rules) -> DataFrame:
     def tester_branch(group: str, sid: int, track: str, specs: list[str]):
         return hits.where(F.col("sid") == sid).select(
             F.lit(group).alias("bname"),
-            gate_key_col(track).alias("bkey"),
+            track_key_col(track).alias("bkey"),
             "warc_epoch",
             "url",
             "domain",
@@ -278,30 +271,26 @@ def xbits_gate_stream(hits: DataFrame, rules) -> DataFrame:
         names = {nm for nm, _, _ in entries}
         tracks = {tr for _, tr, _ in entries}
         specs = [sp for _, _, sp in entries]
+        if len(tracks) > 1:
+            # one tester row evaluates ALL of its rule's tests against
+            # ONE state group, keyed on one track's value; tests keyed
+            # by different tracks would need a cross-group join the
+            # streaming store doesn't have ([U] flexbit.c)
+            raise NotImplementedError(
+                f"streaming bit tests with DIFFERING tracks "
+                f"(sid {sid}, tracks {sorted(tracks)}) are batch-only"
+            )
+        track = next(iter(tracks))
         if len(names) == 1:
+            # several specs on one name (e.g. count gt + lt) fold into
+            # one cmps string: ALL must pass
             nm = next(iter(names))
             single_names.add(nm)
-            # count tests on one name may still carry several specs —
-            # they fold into one cmps string (ALL must pass); differing
-            # tracks are fine here (one tester row per track)
-            by_track: dict[str, list[str]] = {}
-            for _, tr, sp in entries:
-                by_track.setdefault(tr, []).append(sp)
-            for tr, sps in sorted(by_track.items()):
-                branches.append(tester_branch(nm, sid, tr, sps))
+            branches.append(tester_branch(nm, sid, track, specs))
         else:
-            if len(tracks) > 1:
-                # composite state groups key on ONE track's value; tests
-                # keyed by different tracks would need a cross-group
-                # join the streaming store doesn't have ([U] flexbit.c)
-                raise NotImplementedError(
-                    f"streaming bit tests across multiple names with "
-                    f"DIFFERING tracks (sid {sid}, tracks {sorted(tracks)}) "
-                    "are batch-only"
-                )
             group = f"\x00multi:{sid}"
             composite_names[group] = names
-            branches.append(tester_branch(group, sid, next(iter(tracks)), specs))
+            branches.append(tester_branch(group, sid, track, specs))
 
     for sid, name, track, op, expire in writes:
         if name in single_names:
@@ -348,7 +337,7 @@ def _limit_fn(count: int, seconds: int):
     import pandas as pd
 
     def fn(key, pdf_iter, state):
-        win, n = state.get() if state.exists else (-1, 0)
+        win, n = state.get if state.exists else (-1, 0)
         rows = pd.concat(list(pdf_iter), ignore_index=True)
         rows = rows.sort_values(["warc_epoch", "url"], ignore_index=True)
         keep = []

@@ -25,9 +25,8 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 CHILD = r"""
-import json, sys, time
+import json, statistics, sys, time
 sys.path.insert(0, {repo!r})
-from pyspark.sql import Window
 from pyspark.sql import functions as F
 from sagan_spark.session import build_session
 from sagan_spark.gates import xbits
@@ -76,15 +75,7 @@ stream.write.mode("overwrite").parquet(path)
 stream = spark.read.parquet(path)
 
 def run(mode):
-    if mode == "chunked":
-        withn = xbits._chunked_running_sum(stream)
-    else:
-        w = (
-            Window.partitionBy("cname", "ckey")
-            .orderBy("epoch", "k0", "surl", "k1")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        withn = stream.withColumn("_n", F.sum("delta").over(w))
+    withn = xbits._running_count(stream, mode)
     ok = F.col("_n") > F.col("cval")
     return (
         withn.withColumn("_ok", ok)
@@ -96,16 +87,16 @@ def run(mode):
     )
 
 walls, rows = [], None
-for i in range(3):  # rep 0 = warmup (codegen + JIT), median of rest
+for i in range(3):  # rep 0 = warmup (codegen + JIT), median of the rest
     t0 = time.time()
     rows = run(mode)
     walls.append(round(time.time() - t0, 2))
 import shutil
 shutil.rmtree(path, ignore_errors=True)
 spark.stop()
-med = sorted(walls[1:])[0] if len(walls) <= 2 else sorted(walls[1:])[len(walls[1:]) // 2]
 print("@@CAL@@" + json.dumps(
-    {{"K": K, "mode": mode, "walls": walls, "wall": med, "rows": rows}}))
+    {{"K": K, "mode": mode, "walls": walls, "wall": statistics.median(walls[1:]),
+      "rows": rows}}))
 """
 
 

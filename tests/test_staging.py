@@ -1,5 +1,5 @@
 """Staged-snapshot lifecycle (VERDICT r2 item 5 / ADVICE): gated()
-writes per-evaluation parquet snapshots under the staging base — they
+writes one parquet snapshot per evaluation under the staging base — they
 must all live under one per-process dir and be removed by
 cleanup_staged() (also registered atexit), leaving no orphans."""
 
@@ -29,7 +29,7 @@ def test_staged_snapshots_cleaned(spark, tmp_path, monkeypatch):
     session_dirs = os.listdir(base)
     assert len(session_dirs) == 1
     snaps = os.listdir(os.path.join(base, session_dirs[0]))
-    assert len(snaps) >= 2  # pregate + bitbase per run
+    assert len(snaps) == 2  # one gate barrier per gated() run
 
     windows.cleanup_staged()
     assert not os.path.exists(os.path.join(base, session_dirs[0]))

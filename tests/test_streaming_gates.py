@@ -201,24 +201,33 @@ def test_streaming_flexbits_count_multi_name_matches_batch(spark, tmp_path):
 def test_streaming_bit_tests_differing_tracks_rejected(spark, tmp_path):
     """ALL-tests-pass across tests keyed by DIFFERENT tracks needs a
     cross-group join the streaming state store doesn't have — rejected
-    loudly (batch handles it: per-test key columns + min(_ok))."""
+    loudly (batch handles it: per-test key columns + min(_ok)), whether
+    the tests read several bit names or one."""
     import pytest
 
     from sagan_spark.rules.model import Rule, XbitOp
 
-    r = Rule(
+    multi_name = Rule(
         sid=99,
         xbits=(
             XbitOp(op="count", name="a", track="by_domain", cmp="gt", value=1),
             XbitOp(op="count", name="b", track="by_src", cmp="gt", value=1),
         ),
     )
+    single_name = Rule(
+        sid=97,
+        xbits=(
+            XbitOp(op="isset", name="a", track="by_domain"),
+            XbitOp(op="isset", name="a", track="by_src"),
+        ),
+    )
     pages = pages_table(spark, SF_DIR, rep=1)
     src = str(tmp_path / "pages_src_multi")
     pages.coalesce(1).write.mode("overwrite").parquet(src)
     hits = streaming_hits(read_pages_stream(spark, src))
-    with pytest.raises(NotImplementedError, match="batch-only"):
-        xbits_gate_stream(hits, [r])
+    for r in (multi_name, single_name):
+        with pytest.raises(NotImplementedError, match="batch-only"):
+            xbits_gate_stream(hits, [r])
 
 
 def test_mixed_bit_families_rejected_everywhere(spark, tmp_path):
@@ -227,7 +236,7 @@ def test_mixed_bit_families_rejected_everywhere(spark, tmp_path):
     gate branches would double-emit rows passing both families."""
     import pytest
 
-    from sagan_spark.gates.xbits import apply_bit_tests, bit_tests_sql
+    from sagan_spark.gates.xbits import apply_gates, bit_tests_sql
     from sagan_spark.rules.model import Rule, XbitOp
 
     r = Rule(
@@ -244,10 +253,68 @@ def test_mixed_bit_families_rejected_everywhere(spark, tmp_path):
         "src_ip string, dst_ip string, source string"
     )
     with pytest.raises(ValueError, match="mixing"):
-        apply_bit_tests(df, [r], spark)
+        apply_gates(df, [r])
     pages = pages_table(spark, SF_DIR, rep=1)
     src = str(tmp_path / "pages_src_mixed")
     pages.coalesce(1).write.mode("overwrite").parquet(src)
     hits = streaming_hits(read_pages_stream(spark, src))
     with pytest.raises(ValueError, match="mixing"):
         xbits_gate_stream(hits, [r])
+
+
+def test_streaming_gates_second_micro_batch_match_batch(spark, tmp_path):
+    """Group state carried INTO a later micro-batch: two files split by
+    warc_epoch (in order) drain with maxFilesPerTrigger=1, so every gate
+    reads state written by the first batch.  after / suppress / limit
+    and the brute-bit xbits family must still agree with the batch
+    gates."""
+    import os
+
+    from sagan_spark.rules.fixture_rules import fixture_rules
+
+    pages = pages_table(spark, SF_DIR, rep=2)
+    (cut,) = pages.approxQuantile("warc_epoch", [0.5], 0.0)
+    src = tmp_path / "pages_src_2b"
+    src.mkdir()
+    for i, half in enumerate(
+        (pages.where(F.col("warc_epoch") < cut), pages.where(F.col("warc_epoch") >= cut))
+    ):
+        part = str(tmp_path / f"half{i}")
+        half.coalesce(1).write.mode("overwrite").parquet(part)
+        (f,) = [n for n in os.listdir(part) if n.endswith(".parquet")]
+        os.rename(os.path.join(part, f), src / f"part-{i}.parquet")
+        # the file source orders a backlog by modification time
+        os.utime(src / f"part-{i}.parquet", (1_000_000 + i, 1_000_000 + i))
+
+    brute = [r for r in fixture_rules() if r.sid in (5000019, 5000020, 5000021, 5000022)]
+    hits = streaming_hits(read_pages_stream(spark, str(src), max_files_per_trigger=1))
+    # one stateful operator per query: each gate drains on its own
+    streams = {
+        "after_2b": after_gate_stream(hits, 5000017, "by_domain", 3, 3600),
+        "supp_2b": suppress_gate_stream(hits, 5000018, "by_domain", 5, 3600),
+        "limit_2b": limit_gate_stream(hits, 5000016, "by_domain", 2, 7200),
+        "xbits_2b": xbits_gate_stream(hits, brute),
+    }
+    got = set()
+    for name, gated in streams.items():
+        q = (
+            gated.writeStream.outputMode("append")
+            .format("memory")
+            .queryName(name)
+            .option("checkpointLocation", str(tmp_path / f"ckpt_{name}"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        assert sum(p["numInputRows"] > 0 for p in q.recentProgress) == 2, name
+        got |= {(r["url"], r["sid"]) for r in spark.table(name).collect()}
+
+    pipe = Pipeline(spark)
+    batch = pipe.gated(spark.read.parquet(str(src)))
+    sids = [5000016, 5000017, 5000018, 5000020, 5000021]
+    exp = {
+        (r["url"], r["sid"])
+        for r in batch.where(F.col("sid").isin(sids)).select("url", "sid").collect()
+    }
+    assert got == exp
+    assert {sid for _, sid in exp} == set(sids)
