@@ -143,10 +143,9 @@ def _q_routed_refs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_intel(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sagan_spark.enrich.enrich import with_intel
     from sagan_spark.rules.fixture_rules import INTEL
+    from sagan_spark.session import local_df
 
-    intel = spark.createDataFrame(
-        INTEL, schema="indicator string, itype string, isource string"
-    )
+    intel = local_df(spark, INTEL, "indicator string, itype string, isource string")
     df = with_intel(_pipeline(spark).extracted(_pages(spark, sf_dir)), intel)
     return df.where(
         F.col("intel_domain_src").isNotNull() | F.col("intel_hash_src").isNotNull()

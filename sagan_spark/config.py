@@ -35,6 +35,7 @@ from sagan_spark.pipeline import Pipeline
 from sagan_spark.rules.fixture_rules import ip_to_long
 from sagan_spark.rules.model import Rule
 from sagan_spark.rules.parser import parse_rules
+from sagan_spark.session import local_df
 
 
 @dataclass
@@ -123,13 +124,11 @@ def pipeline_from_config(spark: SparkSession, path: str) -> Pipeline:
     cfg = load_config(path)
     pipe = Pipeline(spark, cfg.rules)
     if cfg.classifications:
-        pipe.cls = spark.createDataFrame(
-            cfg.classifications, schema="classtype string, description string, priority int"
+        pipe.cls = local_df(
+            spark, cfg.classifications, "classtype string, description string, priority int"
         )
     if cfg.geo_ranges:
         pipe.geo = geo_dim_df(spark, cfg.geo_ranges)
     if cfg.program_proto:
-        pipe.pmap = spark.createDataFrame(
-            cfg.program_proto, schema="source string, proto string"
-        )
+        pipe.pmap = local_df(spark, cfg.program_proto, "source string, proto string")
     return pipe

@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from sagan_spark.session import local_df
+
 DIM = 64
 # 4 planes = 16 buckets: sized for the ~500-vector test dim table (the
 # driver's embeddings are near-random, the hardest case for sign-LSH —
@@ -413,13 +415,9 @@ def _materialized_centroids(
         )
         pairs = [(r["cid"], r["cemb"]) for r in rows]
         if key is None:
-            return emb.sparkSession.createDataFrame(
-                pairs, schema="cid long, cemb array<double>"
-            )
+            return local_df(emb.sparkSession, pairs, "cid long, cemb array<double>")
         _CENTROID_CACHE[key] = pairs
-    return emb.sparkSession.createDataFrame(
-        _CENTROID_CACHE[key], schema="cid long, cemb array<double>"
-    )
+    return local_df(emb.sparkSession, _CENTROID_CACHE[key], "cid long, cemb array<double>")
 
 
 def _hof_cos(vec_col, cent_emb, row_norm):

@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sagan_spark.session import local_df
+
 
 def flatten_ranges(
     rows: list[tuple[int, int, int, str]],
@@ -77,9 +79,8 @@ def bucketed_geo_rows(
 
 
 def geo_dim_df(spark: SparkSession, rows: list[tuple[int, int, int, str]]) -> DataFrame:
-    return spark.createDataFrame(
-        bucketed_geo_rows(rows),
-        schema="bucket long, net_start long, net_end long, cc string",
+    return local_df(
+        spark, bucketed_geo_rows(rows), "bucket long, net_start long, net_end long, cc string"
     )
 
 
@@ -216,9 +217,10 @@ def flatten_ranges_hex(
 def geo6_dim_df(
     spark: SparkSession, rows: list[tuple[int, int, int, str]]
 ) -> DataFrame:
-    return spark.createDataFrame(
+    return local_df(
+        spark,
         flatten_ranges_hex(rows),
-        schema="bucket string, net_start string, net_end string, cc string",
+        "bucket string, net_start string, net_end string, cc string",
     )
 
 

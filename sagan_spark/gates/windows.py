@@ -34,6 +34,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from sagan_spark.rules.model import Rule
+from sagan_spark.session import local_df
 
 # Every staged snapshot written by this process lives under one
 # per-process dir, removed at interpreter exit (and removable earlier
@@ -150,12 +151,11 @@ def with_gate_keys(df: DataFrame, rules: list[Rule]) -> DataFrame:
     rolling frames share one exchange + sort, and the tumbling `limit`
     window's (sid, gate_key, win_id) clustering is subset-satisfied by
     the same exchange (re-sort only, no second shuffle)."""
-    cfg = df.sparkSession.createDataFrame(
+    cfg = local_df(
+        df.sparkSession,
         [_cfg_row(r) for r in rules],
-        schema=(
-            "sid long, after_track string, after_count int, after_seconds int, "
-            "th_type string, th_track string, th_count int, th_seconds int"
-        ),
+        "sid long, after_track string, after_count int, after_seconds int, "
+        "th_type string, th_track string, th_count int, th_seconds int",
     )
     df = df.join(F.broadcast(cfg), "sid", "left")
     unified = all(

@@ -35,6 +35,7 @@ from sagan_spark.gates.windows import (
     with_gate_keys,
 )
 from sagan_spark.rules.model import Rule
+from sagan_spark.session import local_df
 
 
 def bit_ops_rows(rules: list[Rule]) -> tuple[list[tuple], list[tuple]]:
@@ -156,8 +157,8 @@ def apply_gates(df: DataFrame, rules: list[Rule]) -> DataFrame:
         return out
 
     spark = df.sparkSession
-    writes_df = spark.createDataFrame(
-        writes, schema="sid long, name string, track string, op string, expire int"
+    writes_df = local_df(
+        spark, writes, "sid long, name string, track string, op string, expire int"
     )
     out = source(tester_sids | count_sids, exclude=True)
     if counts:
@@ -217,9 +218,7 @@ def _apply_isset_tests(
     one shuffle + sort, linear per key, hot keys are just longer sorted
     runs (no pairwise blowup).  The DuckDB oracle keeps the join+
     row_number formulation as an independent cross-check."""
-    tests_df = spark.createDataFrame(
-        tests, schema="sid long, name string, track string, test_op string"
-    )
+    tests_df = local_df(spark, tests, "sid long, name string, track string, test_op string")
 
     # NARROW sweep rows (r4 session 2): tester rows carry only
     # (url, sid) through the window sort, and survivors are joined back
@@ -344,9 +343,7 @@ def _apply_count_tests(
     the staged tester scan on that unique, unskewed pair.  The DuckDB
     oracle keeps the join+filter formulation as an independent
     cross-check."""
-    cdf = spark.createDataFrame(
-        counts, schema="sid long, name string, track string, cmp string, cval int"
-    )
+    cdf = local_df(spark, counts, "sid long, name string, track string, cmp string, cval int")
     # NARROW sweep rows (r4 session 2, same rationale as the isset
     # sweep): testers ride as (surl=url, tsid=sid) only; survivors semi-
     # join back to the staged tester scan on the unique, unskewed

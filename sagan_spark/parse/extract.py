@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sagan_spark.rules.model import Rule
+from sagan_spark.session import local_df
 
 IPV4_RE = r"(\d{1,3}\.){3}\d{1,3}"
 # v6: full 8-group form, plus ::-compressed (one double-colon).  Both
@@ -142,7 +143,7 @@ def rule_config_df(spark: SparkSession, rules: list[Rule]) -> DataFrame:
         "country_track string, country_is array<string>, country_isnot array<string>, "
         "sink string, rev int"
     )
-    return spark.createDataFrame(rule_config_rows(rules), schema=schema)
+    return local_df(spark, rule_config_rows(rules), schema)
 
 
 def apply_rule_extraction(hits: DataFrame, cfg: DataFrame, proto_map: DataFrame) -> DataFrame:

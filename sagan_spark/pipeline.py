@@ -36,16 +36,15 @@ from sagan_spark.rules.fixture_rules import (
     geo_rows,
 )
 from sagan_spark.rules.model import Rule
+from sagan_spark.session import local_df
 
 
 def classification_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        CLASSIFICATIONS, schema="classtype string, description string, priority int"
-    )
+    return local_df(spark, CLASSIFICATIONS, "classtype string, description string, priority int")
 
 
 def proto_map_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(PROGRAM_PROTO, schema="source string, proto string")
+    return local_df(spark, PROGRAM_PROTO, "source string, proto string")
 
 
 class Pipeline:
@@ -63,11 +62,7 @@ class Pipeline:
         # reference.c) — tiny broadcast dim joined at the routing stage
         # so the strings don't ride through the gate shuffles
         ref_rows = [(r.sid, "|".join(r.references)) for r in self.rules if r.references]
-        self.refs = (
-            spark.createDataFrame(ref_rows, schema="sid long, refs string")
-            if ref_rows
-            else None
-        )
+        self.refs = local_df(spark, ref_rows, "sid long, refs string") if ref_rows else None
 
     # --- stages -----------------------------------------------------------
     def matched(self, pages: DataFrame) -> DataFrame:

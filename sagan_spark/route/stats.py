@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from sagan_spark.functions.agg import salted_count
 from sagan_spark.gates.xbits import bit_events, bit_ops_rows
 from sagan_spark.rules.model import Rule
+from sagan_spark.session import local_df
 
 
 def domain_stats(hits: DataFrame, salt_n: int = 16) -> DataFrame:
@@ -56,11 +57,9 @@ def bit_state_table(gated: DataFrame, rules: list[Rule], spark: SparkSession) ->
     state; expired sets are reported unset (saganpeek analog)."""
     writes, _ = bit_ops_rows(rules)
     if not writes:
-        return spark.createDataFrame(
-            [], schema="name string, key string, state string, set_epoch long"
-        )
-    writes_df = spark.createDataFrame(
-        writes, schema="sid long, name string, track string, op string, expire int"
+        return local_df(spark, [], "name string, key string, state string, set_epoch long")
+    writes_df = local_df(
+        spark, writes, "sid long, name string, track string, op string, expire int"
     )
     ev = bit_events(gated, writes_df)
     batch_max = ev.agg(F.max("warc_epoch").alias("bmax"))

@@ -34,6 +34,7 @@ import argparse
 import hashlib
 import json
 import os
+import subprocess
 import time
 
 from pyspark.sql import DataFrame, SparkSession
@@ -71,6 +72,20 @@ def lookback_seconds(rules: list[Rule]) -> int | None:
     return lb
 
 
+def _code_rev() -> str:
+    """Short git revision of the checkout this package was loaded from
+    (``unknown`` outside a git checkout or without git)."""
+    try:
+        proc = subprocess.run(
+            ["git", "-C", os.path.dirname(os.path.abspath(__file__)),
+             "rev-parse", "--short", "HEAD"],
+            capture_output=True, text=True, check=True,
+        )
+    except (OSError, subprocess.CalledProcessError):
+        return "unknown"
+    return proc.stdout.strip() or "unknown"
+
+
 def lineage_fingerprint(input_path: str, rep: int, ruleset_text: str | None = None) -> str:
     """Run identity = (input, rep, ruleset sha, code rev).  This is the
     batch re-expression of R2 ``dynamic_load`` ([U] rules.c reload on
@@ -78,12 +93,11 @@ def lineage_fingerprint(input_path: str, rep: int, ruleset_text: str | None = No
     unit's manifest mismatches and the next run recomputes everything
     under the new rules — reload-on-restart with exact provenance,
     instead of reload-in-place."""
-    code_rev = os.popen("git -C /root/repo rev-parse --short HEAD 2>/dev/null").read().strip()
     rs = RULESET if ruleset_text is None else ruleset_text
     h = hashlib.sha256(
         f"{input_path}|{rep}|{hashlib.sha256(rs.encode()).hexdigest()}".encode()
     ).hexdigest()[:16]
-    return f"{h}@{code_rev or 'unknown'}"
+    return f"{h}@{_code_rev()}"
 
 
 def run_partitioned(

@@ -9,13 +9,20 @@ down* for local testing:
   * session timezone pinned to UTC so event-time window semantics are
     identical everywhere (and identical to the DuckDB oracle).
   * Arrow enabled for the pandas-UDF regex batches.
+
+It also owns :func:`local_df`, the one way a driver-side Python list
+becomes a DataFrame.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Sequence
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 
 def build_session(
@@ -112,3 +119,27 @@ def build_session(
         )
         .getOrCreate()
     )
+
+
+def local_df(spark: SparkSession, rows: Sequence[Sequence], ddl: str) -> DataFrame:
+    """``rows`` (tuples in ``ddl`` column order) as a JVM ``LocalRelation``.
+
+    Every driver-side dimension table (rule config, classification,
+    GeoIP, gate and bit specs, centroids, ...) is built here, never by
+    ``spark.createDataFrame`` over a Python list.  That yields a
+    ``LogicalRDD`` over a PythonRDD, so every action that reads the
+    table re-runs one Python worker task per default-parallelism slot
+    (4 under local[4]), at about 0.2 CPU-s each whatever the row count.
+    Most of it is the worker's ``importlib.invalidate_caches()``, which
+    on CPython 3.11 re-reads the pyspark.zip directory once per cached
+    zipimporter on every task.  An Arrow table is shipped to the JVM
+    once and becomes a ``LocalRelation``: a broadcast over it needs no
+    Python worker and no Spark job, so the regex batches stay the only
+    Python tasks."""
+    schema = StructType.fromDDL(ddl)
+    arrow = to_arrow_schema(schema)
+    table = pa.Table.from_arrays(
+        [pa.array([r[i] for r in rows], type=f.type) for i, f in enumerate(arrow)],
+        schema=arrow,
+    )
+    return spark.createDataFrame(table, schema=schema)

@@ -9,10 +9,16 @@ just claimed in docstrings.
     broadcast HASH join (the geo range join carries an equality
     conjunct precisely so it hash-joins);
   * the only Python crossings are the gated Arrow regex batches
-    (ArrowEvalPython), never row-at-a-time BatchEvalPython.
+    (ArrowEvalPython), never row-at-a-time BatchEvalPython, and never a
+    hidden one: no plan reads a Python-list dimension as a PythonRDD
+    (``LogicalRDD`` / ``Scan ExistingRDD``), which would re-run Python
+    worker tasks on every action — every dimension broadcast builds from
+    a ``LocalTableScan``.
 """
 
 from __future__ import annotations
+
+import re
 
 from sagan_spark.pages import pages_table
 from sagan_spark.pipeline import Pipeline
@@ -22,6 +28,35 @@ from .conftest import SF_DIR
 
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _logical_leaves(df) -> list[str]:
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    return [leaves.apply(i).nodeName() for i in range(leaves.size())]
+
+
+def _broadcast_subtrees(plan: str) -> list[str]:
+    """The tree-string lines under each BroadcastExchange node."""
+    lines = plan.splitlines()
+    node_col = [len(ln) - len(re.sub(r"^[\s:+\-]*", "", ln)) for ln in lines]
+    out = []
+    for i, ln in enumerate(lines):
+        if ln[node_col[i]:].startswith("BroadcastExchange"):
+            sub = []
+            for j in range(i + 1, len(lines)):
+                if node_col[j] <= node_col[i]:
+                    break
+                sub.append(lines[j])
+            out.append("\n".join(sub))
+    return out
+
+
+def _assert_no_python_rdd_leaf(df, what: str) -> None:
+    assert "LogicalRDD" not in _logical_leaves(df), f"{what}: PythonRDD dimension"
+    dims = [t for t in _broadcast_subtrees(_plan(df)) if "FileScan" not in t]
+    assert dims, f"{what}: no dimension broadcast"
+    for t in dims:
+        assert "LocalTableScan" in t, f"{what}: dimension not a local relation:\n{t}"
 
 
 def test_match_scan_prunes_html(spark):
@@ -71,3 +106,5 @@ def test_python_crossings_are_arrow_only(spark):
     assert "BatchEvalPython" not in match_plan, "row-at-a-time Python UDF in hot path"
     assert "ArrowEvalPython" in match_plan  # the gated regex batches
     assert "BatchEvalPython" not in _plan(pipe.sink_counts(pages))
+    _assert_no_python_rdd_leaf(pipe.enriched(pages), "enriched")
+    _assert_no_python_rdd_leaf(pipe.sink_counts(pages), "sink_counts")

@@ -5,9 +5,14 @@ from __future__ import annotations
 
 import json
 import os
+import subprocess
+import threading
+
+import pytest
 
 from sagan_spark.pages import pages_table
 from sagan_spark.pipeline import Pipeline
+from sagan_spark.runner import job
 from sagan_spark.runner.job import lookback_seconds, run_partitioned
 from sagan_spark.rules.fixture_rules import fixture_rules
 
@@ -65,3 +70,68 @@ def test_partitioned_equals_global_and_resumes(spark, tmp_path):
     # changed lineage (code/ruleset/input changed) → reruns
     summary3 = run_partitioned(spark, pages, out, partition_hours=12, lineage="t2")
     assert summary3["run"] == 4 and summary3["sink_counts"] == global_counts
+
+
+def _global_counts(spark, pages) -> dict[str, int]:
+    return {
+        f"{r['sink']}/{r['signature_id']}": r["n"]
+        for r in Pipeline(spark).sink_counts(pages).collect()
+    }
+
+
+def test_crash_before_manifest_commit_resumes(spark, tmp_path, monkeypatch):
+    """A unit killed after writing its ``part=`` dir but before its
+    manifest commit is the only unit the next run redoes, and the
+    resumed totals equal the global answer."""
+    pages = pages_table(spark, SF_DIR, rep=4)
+    out = str(tmp_path / "sinks")
+    mdir = os.path.join(out, "_manifests")
+    real_replace = os.replace
+    lock = threading.Lock()
+    crashed: list[str] = []
+
+    def replace_crashing_once(src, dst):
+        with lock:
+            crash = not crashed and os.path.dirname(dst) == mdir
+            if crash:
+                crashed.append(dst)
+        if crash:
+            raise OSError("injected crash before the manifest commit")
+        return real_replace(src, dst)
+
+    monkeypatch.setattr(job.os, "replace", replace_crashing_once)
+    with pytest.raises(OSError, match="injected crash"):
+        run_partitioned(spark, pages, out, partition_hours=12, lineage="t1")
+    monkeypatch.setattr(job.os, "replace", real_replace)
+
+    (lost,) = crashed
+    part_id = os.path.basename(lost)[len("part-"):-len(".json")]
+    assert os.path.isdir(os.path.join(out, f"part={part_id}"))
+    committed = {
+        f: os.stat(os.path.join(mdir, f)).st_mtime_ns
+        for f in os.listdir(mdir)
+        if f.endswith(".json")
+    }
+    assert len(committed) == 3 and os.path.basename(lost) not in committed
+
+    summary = run_partitioned(spark, pages, out, partition_hours=12, lineage="t1")
+    assert summary["units"] == 4 and summary["run"] == 1 and summary["skipped"] == 3
+    assert os.path.exists(lost)
+    for f, mtime in committed.items():
+        assert os.stat(os.path.join(mdir, f)).st_mtime_ns == mtime, f"{f} re-ran"
+    assert summary["sink_counts"] == _global_counts(spark, pages)
+
+
+def test_lineage_code_rev_follows_the_package_checkout(tmp_path, monkeypatch):
+    """The code revision is read from the checkout the package lives in,
+    whatever the working directory, and is ``unknown`` without git."""
+    pkg = os.path.dirname(os.path.abspath(job.__file__))
+    proc = subprocess.run(
+        ["git", "-C", pkg, "rev-parse", "--short", "HEAD"],
+        capture_output=True, text=True,
+    )
+    want = proc.stdout.strip() if proc.returncode == 0 else "unknown"
+    monkeypatch.chdir(tmp_path)
+    assert job.lineage_fingerprint("/in", 4, ruleset_text="x").endswith(f"@{want}")
+    monkeypatch.setenv("PATH", str(tmp_path))  # no git executable
+    assert job.lineage_fingerprint("/in", 4, ruleset_text="x").endswith("@unknown")
