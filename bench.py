@@ -36,8 +36,7 @@ Methodology (r4, unchanged — statistics rationale audited in r3/r4):
     ratio cancels it); the HEADLINE pair is 1→4 cores — the pair
     least affected by this VM's single-JVM thread pathology (in the
     host's loaded mode even 8 threads is inside the band; interleaved
-    build-A/B evidence in BASELINE.md "r4 session 2") — with 2→8
-    measured and shipped alongside for continuity when budget allows;
+    build-A/B evidence in BASELINE.md "r4 session 2");
   * hypervisor steal (/proc/stat) is measured around each cell; a round
     is STEAL-CLEAN iff both cells saw steal < 0.3% — a selection
     criterion fixed BEFORE seeing the efficiency, so conditioning on
@@ -330,8 +329,7 @@ def main() -> None:
     # host, and a same-minutes interleaved build A/B showed the
     # threshold drops BELOW 8 threads in the host's loaded mode.  The
     # 1→4 pair preserves the 4× factor and stays under the pathology
-    # band in both host modes; 2→8 ships below for continuity when the
-    # budget allows.
+    # band in both host modes.
     n_small, n_big = 1, 4
     rounds: list[dict] = []
     t_round0 = time.time()
@@ -354,8 +352,7 @@ def main() -> None:
             "protocol": (
                 "headline pair = 1->4 cores (the executors-are-machines proxy "
                 "least affected by this VM's single-JVM thread pathology — "
-                "interleaved build A/B evidence in BASELINE.md; 2->8 shipped "
-                "alongside for continuity when budget allows); median over "
+                "interleaved build A/B evidence in BASELINE.md); median over "
                 "STEAL-CLEAN paired rounds (clean = both cells <0.3% hypervisor "
                 "steal, a criterion independent of the outcome; rounds run "
                 "until >=2 clean within the wall budget, never conditioned on "
@@ -404,39 +401,7 @@ def main() -> None:
     if prim["warning"]:
         print(f"# SCALING WARNING: {prim['warning']}", file=sys.stderr)
 
-    # ---- stage 4 (budget-gated): secondary 2→8 continuity pair ------------
-    est_2to8 = round_cost * 0.75
-    if remaining() > est_2to8 + 240:
-        sec_rounds = [run_pair_round(2, 8, sf_dir, rep, reps=3)]
-        sec = summarize_pair(2, 8, sec_rounds)
-        RESULT["scaling"]["secondary_2_to_8"] = {
-            k: sec[k]
-            for k in (
-                "n_cores", "4n_cores", "efficiency", "round_efficiencies",
-                "round_steal_pct", "walls_n", "walls_4n", "warning",
-            )
-        }
-        queries["flagship_local8"] = sec["t_big"]
-        thr_8 = sec["n_pages"] / sec["t_big"]
-        RESULT["scaling"]["substrate_ceiling_8_to_32"] = {
-            "throughput_8": round(thr_8, 1),
-            "throughput_32": round(thr_full, 1),
-            "efficiency": round(thr_full / ((cpus / 8) * thr_8), 3),
-            "note": (
-                "JVM workloads anti-scale past ~8-16 threads on this VM "
-                "regardless of engine code (and past ~4-8 in the host's "
-                "loaded mode); see BASELINE.md"
-            ),
-        }
-        stage_done("secondary_2_to_8")
-    else:
-        skip(
-            "secondary_2_to_8",
-            f"~{est_2to8:.0f}s pair does not fit the {remaining():.0f}s "
-            "remaining budget",
-        )
-
-    # ---- stage 5 (budget-gated): datapipe headliners at full parallelism --
+    # ---- stage 4 (budget-gated): datapipe headliners at full parallelism --
     # in-process (plan-shape benchmarks, not the scaling measurement)
     if remaining() > 180:
         from sagan_spark.datapipe import dedup, similarity, text

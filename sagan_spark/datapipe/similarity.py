@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from sagan_spark.session import local_df
+from sagan_spark.session import local_df, memo
 
 DIM = 64
 # 4 planes = 16 buckets: sized for the ~500-vector test dim table (the
@@ -366,30 +366,6 @@ def trained_centroids(emb: DataFrame, iters: int = KMEANS_ITERS) -> DataFrame:
     return cents
 
 
-# trained-centroid memo: (analyzed-plan semantic hash, iters, strides) →
-# collected centroid rows.  Production IVF trains OFFLINE once and
-# serves the frozen centroids to every query; retraining per ivf_topk
-# call (the pre-cache behavior) re-ran the Lloyd jobs on each of a
-# session's repeated queries for identical input.  Keyed on the
-# ANALYZED plan's semantic hash so a different source path / filter
-# retrains; values are 16 tiny rows, never evicted.
-#
-# ASSUMPTION (ADVICE r4): a path's CONTENTS are immutable for the
-# process lifetime — two reads of the same path hash identically even
-# after an overwrite, so a process that regenerates data in place would
-# be served stale centroids.  That matches the engine's data-lake
-# contract (immutable snapshot dirs; new data ⇒ new path), and every
-# test writes fixtures to fresh tmp_path dirs.  Code that DOES rewrite
-# a path in place must call clear_centroid_cache() after the rewrite.
-_CENTROID_CACHE: dict[tuple, list] = {}
-
-
-def clear_centroid_cache() -> None:
-    """Drop every memoized centroid set — the invalidation hook for the
-    rewrote-the-same-path case the semantic-hash key cannot see."""
-    _CENTROID_CACHE.clear()
-
-
 def _materialized_centroids(
     emb: DataFrame, iters: int = KMEANS_ITERS
 ) -> DataFrame:
@@ -398,26 +374,20 @@ def _materialized_centroids(
     offline-train / online-serve split: the serving plan below sees a
     16-row local relation, so the corpus-side assignment stays a pure
     projection with NO trace of the training subtree (plan-pinned by
-    tests/test_plan_health.py)."""
-    key = None
-    try:
-        key = (
-            emb._jdf.queryExecution().analyzed().semanticHash(),
-            iters,
-            TRAIN_STRIDE,
-            CENTROID_STRIDE,
-        )
-    except Exception:
-        pass  # py4j surface changed — train fresh, correctness unaffected
-    if key is None or key not in _CENTROID_CACHE:
-        rows = sorted(
-            trained_centroids(emb, iters).collect(), key=lambda r: r["cid"]
-        )
-        pairs = [(r["cid"], r["cemb"]) for r in rows]
-        if key is None:
-            return local_df(emb.sparkSession, pairs, "cid long, cemb array<double>")
-        _CENTROID_CACHE[key] = pairs
-    return local_df(emb.sparkSession, _CENTROID_CACHE[key], "cid long, cemb array<double>")
+    tests/test_plan_health.py).
+
+    The trained rows are memoized per (``emb``'s input content, iters,
+    strides).  Production IVF trains OFFLINE once and serves the frozen
+    centroids to every query; retraining per ivf_topk call re-ran the
+    Lloyd jobs on each of a session's repeated queries for identical
+    input."""
+
+    def train() -> list[tuple]:
+        rows = sorted(trained_centroids(emb, iters).collect(), key=lambda r: r["cid"])
+        return [(r["cid"], r["cemb"]) for r in rows]
+
+    pairs = memo(emb, ("ivf_centroids", iters, TRAIN_STRIDE, CENTROID_STRIDE), train)
+    return local_df(emb.sparkSession, pairs, "cid long, cemb array<double>")
 
 
 def _hof_cos(vec_col, cent_emb, row_norm):

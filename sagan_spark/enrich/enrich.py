@@ -305,12 +305,6 @@ def with_intel(df: DataFrame, intel: DataFrame) -> DataFrame:
     )
 
 
-def intel_select_sql() -> str:
-    """Oracle twin SELECT-list additions (requires intel VALUES joined
-    as `idom` / `ihash`)."""
-    return "idom.isource AS intel_domain_src, ihash.isource AS intel_hash_src"
-
-
 def with_classification(df: DataFrame, cls: DataFrame) -> DataFrame:
     """classtype → (priority, description); broadcast equi-join (E2)."""
     return df.join(F.broadcast(cls), "classtype", "left")

@@ -35,7 +35,7 @@ from sagan_spark.gates.windows import (
     with_gate_keys,
 )
 from sagan_spark.rules.model import Rule
-from sagan_spark.session import local_df
+from sagan_spark.session import local_df, memo
 
 
 def bit_ops_rows(rules: list[Rule]) -> tuple[list[tuple], list[tuple]]:
@@ -106,17 +106,18 @@ def apply_gates(df: DataFrame, rules: list[Rule]) -> DataFrame:
     writes, tests = bit_ops_rows(rules)
     counts = bit_count_rows(rules)
     _reject_mixed_bit_families(tests, counts)
-    # probe-memo identity: the PRE-staging plan plus every spec the
+    # probe-memo identity: the PRE-staging frame plus every spec the
     # probed stream depends on.  The staged snapshot's path changes per
     # run, but its contents derive deterministically from these.
-    probe_key = _plan_key(df) if counts else None
-    if probe_key is not None:
-        probe_key = (
-            probe_key,
+    probe_key = (
+        df,
+        (
+            "flexcount_probe",
             tuple(counts),
             tuple(writes),
             tuple((r.sid, r.after, r.threshold) for r in rules),
-        )
+        ),
+    )
     win_sids = {r.sid for r in rules if r.after or r.threshold}
     df = with_gate_keys(df, rules)
     if not (win_sids or tests or counts):
@@ -175,27 +176,6 @@ def apply_gates(df: DataFrame, rules: list[Rule]) -> DataFrame:
             )
         )
     return out
-
-
-def _plan_key(df: DataFrame) -> int | None:
-    """Semantic hash of the analyzed plan — the stable identity used by
-    the flexcount probe memo.  None (→ no memoization) if the py4j
-    surface changed."""
-    try:
-        return df._jdf.queryExecution().analyzed().semanticHash()
-    except Exception:
-        return None
-
-
-# hottest-(name, key)-group row count per (upstream plan, gate specs)
-# — see the auto-trigger block in _apply_count_tests
-_FLEXCOUNT_PROBE_CACHE: dict[tuple, int] = {}
-
-
-def clear_flexcount_probe_cache() -> None:
-    """Invalidation hook for the rewrote-the-same-path case the
-    semantic-hash key cannot see (twin of clear_centroid_cache)."""
-    _FLEXCOUNT_PROBE_CACHE.clear()
 
 
 def _apply_isset_tests(
@@ -306,7 +286,7 @@ def _apply_count_tests(
     counts: list[tuple],
     writes_df: DataFrame,
     spark: SparkSession,
-    probe_key: tuple | None = None,
+    probe_key: tuple[DataFrame, tuple],
 ) -> DataFrame:
     """flexbits ``count`` testers ([U] src/flexbit.c counter form).
 
@@ -414,16 +394,13 @@ def _apply_count_tests(
     # parquet, payload pruned away), and at 100× one Zipf-hot domain
     # otherwise serializes the whole stage.
     #
-    # The hottest-group count is MEMOIZED per ``probe_key`` (upstream-
-    # plan semantic hash + count, writer and window-gate specs): the
-    # probe is an eager one-row job at plan-build time, and a session
-    # that rebuilds the same pipeline over the same input (bench reps,
-    # repeated queries) re-paid its ~1 s of fixed latency for a
-    # deterministic answer.  Same immutable-path contract as the IVF
-    # centroid memo (datapipe/similarity.py) — regenerating data IN
-    # PLACE at the same path must call clear_flexcount_probe_cache().
-    max_group = _FLEXCOUNT_PROBE_CACHE.get(probe_key) if probe_key else None
-    if max_group is None:
+    # The hottest-group count is MEMOIZED per ``probe_key`` (upstream
+    # frame + count, writer and window-gate specs): the probe is an
+    # eager one-row job at plan-build time, and a session that rebuilds
+    # the same pipeline over the same input (bench reps, repeated
+    # queries) re-paid its ~1 s of fixed latency for a deterministic
+    # answer.
+    def hottest_group() -> int:
         stats = (
             event_rows.select("cname", "ckey", "epoch")
             .unionByName(tester_rows.select("cname", "ckey", "epoch"))
@@ -432,9 +409,9 @@ def _apply_count_tests(
             .agg(F.max("n").alias("max_group"))
             .first()
         )
-        max_group = stats["max_group"] or 0
-        if probe_key is not None:
-            _FLEXCOUNT_PROBE_CACHE[probe_key] = max_group
+        return stats["max_group"] or 0
+
+    max_group = memo(*probe_key, hottest_group)
     withn = _running_count(stream, _pick_flexcount_plan(max_group))
     ok = (
         F.when(F.col("cmp") == "gt", F.col("_n") > F.col("cval"))

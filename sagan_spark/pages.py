@@ -30,8 +30,14 @@ Synthesis properties (FIXTURES.md F1):
 
 from __future__ import annotations
 
+import hashlib
+import os
+from pathlib import Path
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from sagan_spark.session import file_fingerprint
 
 # Default replication factor: each source document becomes REP pages
 # (distinct urls, distinct timestamps/domains).  Keeps the correctness
@@ -44,10 +50,6 @@ SPAN_S = 172_800  # 48 h
 
 def load_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
-def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/events.parquet")
 
 
 def load_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -216,11 +218,11 @@ def pages_table(
         return spark.read.format("iceberg").load(iceberg_table)
     if fmt != "parquet":
         raise ValueError(f"unsupported pages format: {fmt!r}")
-    import hashlib
-    import os
-
-    key = hashlib.md5(f"{sf_dir}|{rep}|v5".encode()).hexdigest()[:12]
-    path = f"/tmp/sagan_pages_cache/{key}"
+    # keyed on this module's own bytes (the synthesis) and the
+    # documents input's files, so an edit to either rebuilds the cache
+    h = hashlib.md5(Path(__file__).read_bytes())
+    h.update(repr((rep, file_fingerprint([f"{sf_dir}/documents.parquet"]))).encode())
+    path = f"/tmp/sagan_pages_cache/{h.hexdigest()[:12]}"
     marker = f"{path}/_SUCCESS"
     if not os.path.exists(marker):
         # 64-way range layout on warc_epoch: the synthesis plan would

@@ -138,9 +138,6 @@ FROM routed WHERE sink = 'alert'
 # `unhex` this column.  Simplifications documented: event_id :=
 # event_second (no per-process counter in a deterministic batch),
 # classification_id := priority.
-PROTO_CODE = {"tcp": 6, "udp": 17, "icmp": 1}
-
-
 def unified2_hex(routed: DataFrame) -> DataFrame:
     from sagan_spark.enrich.enrich import ip_to_long_col
 

@@ -363,8 +363,3 @@ def classification_values_sql() -> str:
         f"('{ct}', '{desc}', {pr})" for ct, desc, pr in CLASSIFICATIONS
     )
     return f"(VALUES {rows}) AS classification(classtype, description, priority)"
-
-
-def program_proto_values_sql() -> str:
-    rows = ", ".join(f"('{p}', '{pr}')" for p, pr in PROGRAM_PROTO)
-    return f"(VALUES {rows}) AS program_proto(source, proto)"

@@ -11,18 +11,23 @@ down* for local testing:
   * Arrow enabled for the pandas-UDF regex batches.
 
 It also owns :func:`local_df`, the one way a driver-side Python list
-becomes a DataFrame.
+becomes a DataFrame, and :func:`memo`, the one driver-side cache.
 """
 
 from __future__ import annotations
 
 import os
-from collections.abc import Sequence
+from collections.abc import Callable, Hashable, Iterable, Sequence
+from typing import TypeVar
+from urllib.parse import unquote, urlparse
 
 import pyarrow as pa
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
+
+T = TypeVar("T")
 
 
 def build_session(
@@ -79,10 +84,7 @@ def build_session(
         # tasks and serializes the match stage (measured: task-time ≈
         # wall at every core count).  16 MB targets ~cores×2-4 match
         # tasks; a pure-scan workload on a real cluster would keep 128m
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "16m"),
-        )
+        .config("spark.sql.files.maxPartitionBytes", "16m")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
@@ -102,11 +104,8 @@ def build_session(
         # (39-60s → 9.4s for the match stage at 32 threads)
         .config(
             "spark.driver.extraJavaOptions",
-            os.environ.get(
-                "SPARK_GRAFT_JVM_OPTS",
-                f"-XX:+UseParallelGC -Xms{drv_mem} -XX:+UnlockDiagnosticVMOptions "
-                "-XX:+UseCountedLoopSafepoints -XX:LoopStripMiningIter=1000",
-            ),
+            f"-XX:+UseParallelGC -Xms{drv_mem} -XX:+UnlockDiagnosticVMOptions "
+            "-XX:+UseCountedLoopSafepoints -XX:LoopStripMiningIter=1000",
         )
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
@@ -143,3 +142,43 @@ def local_df(spark: SparkSession, rows: Sequence[Sequence], ddl: str) -> DataFra
         schema=arrow,
     )
     return spark.createDataFrame(table, schema=schema)
+
+
+def file_fingerprint(paths: Iterable[str]) -> tuple:
+    """Sorted ``(path, size, st_mtime_ns)`` of every file named by
+    ``paths`` (local paths or ``file:`` URIs; a directory stands for
+    the files under it).  Raises ``OSError`` for anything it cannot
+    stat, such as a remote URI."""
+    out = []
+    for p in paths:
+        path = unquote(urlparse(p).path) if p.startswith("file:") else p
+        for f in [os.path.join(d, n) for d, _, ns in os.walk(path) for n in ns] or [path]:
+            st = os.stat(f)
+            out.append((f, st.st_size, st.st_mtime_ns))
+    return tuple(sorted(out))
+
+
+_MEMO: dict[tuple, object] = {}
+
+
+def memo(df: DataFrame, params: Hashable, compute: Callable[[], T]) -> T:
+    """``compute()``, cached per (``df``'s input content, ``params``).
+
+    The key is the analyzed plan's semantic hash, the fingerprint of
+    ``df.inputFiles()`` and ``params``.  The semantic hash alone cannot
+    see a path rewritten in place: the plan reads the same, only its
+    files change.  With their sizes and mtimes in the key such a
+    rewrite recomputes, so no entry needs clearing by hand.  When the
+    key cannot be built (an input that is not a local file, or a frame
+    with no JVM plan behind it) the value is computed and not stored."""
+    try:
+        key = (
+            df._jdf.queryExecution().analyzed().semanticHash(),
+            file_fingerprint(df.inputFiles()),
+            params,
+        )
+    except (OSError, Py4JError, AttributeError):
+        return compute()
+    if key not in _MEMO:
+        _MEMO[key] = compute()
+    return _MEMO[key]

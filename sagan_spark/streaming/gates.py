@@ -70,6 +70,9 @@ def _apply(
     )
 
 
+# The r5 (lat, exps) state cannot read a checkpoint written with the
+# pre-r5 bit-state schema.  Discard such checkpoints, or start the query
+# under a new name, before running this version.
 BIT_STATE_SCHEMA = "lat array<string>, exps array<string>"
 
 # sentinel expiry for `set` events with no expire: effectively never

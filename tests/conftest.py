@@ -3,6 +3,7 @@ from __future__ import annotations
 import duckdb
 import pytest
 
+from sagan_spark import session
 from sagan_spark.session import build_session
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -17,6 +18,15 @@ def spark():
     s = build_session("sagan_spark_tests", master="local[4]", shuffle_partitions=8)
     yield s
     s.stop()
+
+
+@pytest.fixture
+def memo_store(monkeypatch):
+    """An empty store for :func:`sagan_spark.session.memo`, restored
+    after the test."""
+    store: dict = {}
+    monkeypatch.setattr(session, "_MEMO", store)
+    return store
 
 
 _DUCK_CONS: dict[str, duckdb.DuckDBPyConnection] = {}

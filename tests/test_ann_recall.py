@@ -5,6 +5,10 @@ numbers without a recall floor are meaningless for ANN."""
 
 from __future__ import annotations
 
+import pyarrow as pa
+import pyarrow.parquet as pq
+
+from sagan_spark.datapipe import similarity
 from sagan_spark.datapipe.similarity import (
     brute_force_topk,
     ivf_cells,
@@ -58,3 +62,39 @@ def test_ivf_partition_and_recall(spark):
     assert r_ivf >= r_stride, (
         f"trained recall {r_ivf:.2f} < stride baseline {r_stride:.2f}"
     )
+
+
+def test_ivf_retrains_after_in_place_rewrite(spark, monkeypatch, tmp_path, memo_store):
+    """The centroid memo is keyed on the input files' content: a file
+    rewritten in place with different vectors (same path, same plan
+    semantic hash) must retrain and serve the new centroids."""
+    trained = []
+    real = similarity.trained_centroids
+
+    def counting(emb, iters):
+        trained.append(iters)
+        return real(emb, iters)
+
+    monkeypatch.setattr(similarity, "trained_centroids", counting)
+    path = str(tmp_path / "embeddings.parquet")
+    table = pq.read_table(f"{SF_DIR}/embeddings.parquet")
+
+    def run(tbl):
+        pq.write_table(tbl, path)
+        emb = spark.read.parquet(path)
+        ivf_topk(emb).collect()
+        # a memo hit: the centroids ivf_topk served
+        return sorted(tuple(r) for r in similarity._materialized_centroids(emb).collect())
+
+    first = run(table)
+    assert len(trained) == 1
+    # every vector moves to the next vec_id: new centroids
+    vecs = table.column("embedding")
+    rotated = pa.chunked_array(vecs.slice(1).chunks + vecs.slice(0, 1).chunks)
+    col = table.schema.get_field_index("embedding")
+    second = run(table.set_column(col, "embedding", rotated))
+    assert len(trained) == 2
+    fresh = sorted(
+        tuple(r) for r in real(spark.read.parquet(path), similarity.KMEANS_ITERS).collect()
+    )
+    assert second == fresh != first

@@ -188,27 +188,26 @@ def test_flexcount_threshold_is_the_calibrated_value():
     assert xbits._pick_flexcount_plan(2_000_001) == "chunked"
 
 
-def test_flexcount_probe_memo(spark, monkeypatch):
-    """The hottest-group probe is memoized per (upstream plan, gate
+def test_flexcount_probe_memo(spark, monkeypatch, memo_store):
+    """The hottest-group probe is memoized per (upstream input, gate
     specs): a second build over the same input must not re-run the
     stats job (bench reps / repeated queries re-paid ~1 s of fixed
     latency per plan build), and a ruleset with the same count specs
     but different writers probes a different stream, so it must not
     share the entry (ADVICE r5)."""
-    xbits.clear_flexcount_probe_cache()
     # NOTE: reuse the SAME DataFrame object — a fresh createDataFrame
     # local relation gets new expression ids and a different semantic
     # hash (memo miss, re-probe, correct but uncached).  The production
     # shape (spark.read.parquet of the same path) hashes stably.
     frame = _frame(spark, COUNT_ROWS + _rows(17, [1]))
     assert _count_run(spark, monkeypatch, frame=frame) == ([15, 105], "single")
-    assert len(xbits._FLEXCOUNT_PROBE_CACHE) == 1
+    assert len(memo_store) == 1
     # poison the cached value: if the second build re-probed, the memo
     # entry would be overwritten back to the true count; if it read the
     # memo, the poisoned value forces the chunked plan while results
     # stay identical (plan choice never changes semantics)
-    (key,) = xbits._FLEXCOUNT_PROBE_CACHE
-    xbits._FLEXCOUNT_PROBE_CACHE[key] = 10**9
+    (key,) = memo_store
+    memo_store[key] = 10**9
     assert _count_run(spark, monkeypatch, frame=frame) == ([15, 105], "chunked")
     # sid 17 sets the bit once, so the count never exceeds 1; re-probed,
     # not served the poisoned entry
@@ -219,6 +218,24 @@ def test_flexcount_probe_memo(spark, monkeypatch):
         [],
         "single",
     )
-    assert len(xbits._FLEXCOUNT_PROBE_CACHE) == 2
-    xbits.clear_flexcount_probe_cache()
-    assert not xbits._FLEXCOUNT_PROBE_CACHE
+    assert len(memo_store) == 2
+
+
+def test_flexcount_probe_reruns_after_in_place_rewrite(
+    spark, monkeypatch, tmp_path, memo_store
+):
+    """A parquet path rewritten in place keeps its plan's semantic hash,
+    but the probe memo must see the new files: the second build re-runs
+    the probe and picks the chunked plan for the hotter group."""
+    path = str(tmp_path / "alerts")
+
+    def build(rows):
+        _frame(spark, rows).write.mode("overwrite").parquet(path)
+        return _count_run(spark, monkeypatch, threshold=11, frame=spark.read.parquet(path))
+
+    # the (bit, d1) group: 3 sets + 3 expiries + 5 testers = 11 rows
+    assert build(COUNT_ROWS) == ([15, 105], "single")
+    # a fourth set at t=30 makes the group 13 rows, past the threshold,
+    # and lifts the count above 1 at t=115 too
+    assert build(COUNT_ROWS + _rows(10, [30])) == ([15, 105, 115], "chunked")
+    assert len(memo_store) == 2
