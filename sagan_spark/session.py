@@ -9,6 +9,8 @@ down* for local testing:
   * session timezone pinned to UTC so event-time window semantics are
     identical everywhere (and identical to the DuckDB oracle).
   * Arrow enabled for the pandas-UDF regex batches.
+  * Python workers start from :mod:`sagan_spark.pydaemon`, without
+    Spark's jar and zips on their path.
 
 It also owns :func:`local_df`, the one way a driver-side Python list
 becomes a DataFrame, and :func:`memo`, the one driver-side cache.
@@ -23,11 +25,15 @@ from urllib.parse import unquote, urlparse
 
 import pyarrow as pa
 from py4j.protocol import Py4JError
+from pyspark import SparkConf
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
 T = TypeVar("T")
+
+# the directory that holds the sagan_spark package
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def build_session(
@@ -61,6 +67,11 @@ def build_session(
         except ValueError:
             n = cpus
         shuffle_partitions = max(8, n * 2)
+    # workers run `python -m sagan_spark.pydaemon` from the driver's cwd,
+    # so they need the package root on their path.  A value a running
+    # JVM already holds (spark-defaults, --conf) stays behind it; the
+    # JVM itself appends the driver's own PYTHONPATH
+    worker_path = SparkConf().get("spark.executorEnv.PYTHONPATH", "")
 
     return (
         SparkSession.builder.appName(app_name)
@@ -107,6 +118,11 @@ def build_session(
             f"-XX:+UseParallelGC -Xms{drv_mem} -XX:+UnlockDiagnosticVMOptions "
             "-XX:+UseCountedLoopSafepoints -XX:LoopStripMiningIter=1000",
         )
+        .config("spark.python.daemon.module", "sagan_spark.pydaemon")
+        .config(
+            "spark.executorEnv.PYTHONPATH",
+            os.pathsep.join(p for p in (_PACKAGE_ROOT, worker_path) if p),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         # shuffle/spill files on tmpfs when available: local[32] puts 32
@@ -128,13 +144,13 @@ def local_df(spark: SparkSession, rows: Sequence[Sequence], ddl: str) -> DataFra
     ``spark.createDataFrame`` over a Python list.  That yields a
     ``LogicalRDD`` over a PythonRDD, so every action that reads the
     table re-runs one Python worker task per default-parallelism slot
-    (4 under local[4]), at about 0.2 CPU-s each whatever the row count.
-    Most of it is the worker's ``importlib.invalidate_caches()``, which
-    on CPython 3.11 re-reads the pyspark.zip directory once per cached
-    zipimporter on every task.  An Arrow table is shipped to the JVM
-    once and becomes a ``LocalRelation``: a broadcast over it needs no
-    Python worker and no Spark job, so the regex batches stay the only
-    Python tasks."""
+    (4 under local[4]) whatever the row count.  Each task starts with
+    ``importlib.invalidate_caches()``, which on CPython 3.11 re-reads
+    every archive on the worker's path: the spark-core jar and Spark's
+    zips, unless :mod:`sagan_spark.pydaemon` has removed them.  An Arrow
+    table is shipped to the JVM once and becomes a ``LocalRelation``: a
+    broadcast over it needs no Python worker and no Spark job, so the
+    regex batches stay the only Python tasks."""
     schema = StructType.fromDDL(ddl)
     arrow = to_arrow_schema(schema)
     table = pa.Table.from_arrays(
