@@ -81,9 +81,9 @@ for _ in range(reps):
     spark.catalog.clearCache()
     t0 = time.time()
     # plan build is INSIDE the timed region: sink_counts() triggers the
-    # eager staging barrier + the flexcount stats probe, i.e. real work
-    # a fresh job pays.  Rebuilt per rep — a reused DataFrame would
-    # re-read rep 1's staged snapshot and skip the parse/match stage.
+    # eager staging barrier, i.e. real work a fresh job pays.  Rebuilt
+    # per rep — a reused DataFrame would re-read rep 1's staged snapshot
+    # and skip the parse/match stage.
     df = pipe.sink_counts(pages)
     t1 = time.time()
     df.collect()

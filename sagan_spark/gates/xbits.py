@@ -35,7 +35,7 @@ from sagan_spark.gates.windows import (
     with_gate_keys,
 )
 from sagan_spark.rules.model import Rule
-from sagan_spark.session import local_df, memo
+from sagan_spark.session import local_df
 
 
 def bit_ops_rows(rules: list[Rule]) -> tuple[list[tuple], list[tuple]]:
@@ -106,18 +106,6 @@ def apply_gates(df: DataFrame, rules: list[Rule]) -> DataFrame:
     writes, tests = bit_ops_rows(rules)
     counts = bit_count_rows(rules)
     _reject_mixed_bit_families(tests, counts)
-    # probe-memo identity: the PRE-staging frame plus every spec the
-    # probed stream depends on.  The staged snapshot's path changes per
-    # run, but its contents derive deterministically from these.
-    probe_key = (
-        df,
-        (
-            "flexcount_probe",
-            tuple(counts),
-            tuple(writes),
-            tuple((r.sid, r.after, r.threshold) for r in rules),
-        ),
-    )
     win_sids = {r.sid for r in rules if r.after or r.threshold}
     df = with_gate_keys(df, rules)
     if not (win_sids or tests or counts):
@@ -165,8 +153,7 @@ def apply_gates(df: DataFrame, rules: list[Rule]) -> DataFrame:
     if counts:
         out = out.unionByName(
             _apply_count_tests(
-                source(count_sids), source(writer_sids), counts, writes_df, spark,
-                probe_key=probe_key,
+                source(count_sids), source(writer_sids), counts, writes_df, spark
             )
         )
     if tests:
@@ -286,7 +273,6 @@ def _apply_count_tests(
     counts: list[tuple],
     writes_df: DataFrame,
     spark: SparkSession,
-    probe_key: tuple[DataFrame, tuple],
 ) -> DataFrame:
     """flexbits ``count`` testers ([U] src/flexbit.c counter form).
 
@@ -307,12 +293,16 @@ def _apply_count_tests(
     expiry(-1) / tester(read) rows per (name, key), sort once by the
     deterministic total order, take sum(delta) over the running window.
     One shuffle + sort, linear per key — hot keys are longer sorted
-    runs, never a pairwise blowup.  Ordering encodes the exact
-    semantics: at equal epoch, expiries (k0=0) precede everything
-    (expired iff t ≥ eepoch+expire), then sets/testers interleave by
-    url with set-before-tester at equal url (counted iff eurl ≤ url).
-    Sets with expire ≤ 0 can never be counted ((eepoch ≤ t) ∧
-    (t < eepoch) is empty) and are dropped from both streams.
+    runs, never a pairwise blowup.  A (name, key) group sorts in one
+    task; the epoch-chunked alternative lost below ~10^6 rows per
+    group (BASELINE.md), so this is the only plan.
+
+    Ordering encodes the exact semantics: at equal epoch, expiries
+    (k0=0) precede everything (expired iff t ≥ eepoch+expire), then
+    sets/testers interleave by url with set-before-tester at equal url
+    (counted iff eurl ≤ url).  Sets with expire ≤ 0 can never be
+    counted ((eepoch ≤ t) ∧ (t < eepoch) is empty) and are dropped from
+    both streams.
 
     Stage economy: tester rows ride the sweep as NARROW (url, sid)
     keys (r4 session 2 — a full-payload carry made the hot key group's
@@ -388,31 +378,12 @@ def _apply_count_tests(
         )
     )
     stream = event_rows.unionByName(tester_rows)
-    # hot-key trigger: one cheap stats job over the (payload-pruned)
-    # stream decides whether any single (name, key) group has outgrown
-    # one task's sort.  The columns scanned are tiny (the staged base is
-    # parquet, payload pruned away), and at 100× one Zipf-hot domain
-    # otherwise serializes the whole stage.
-    #
-    # The hottest-group count is MEMOIZED per ``probe_key`` (upstream
-    # frame + count, writer and window-gate specs): the probe is an
-    # eager one-row job at plan-build time, and a session that rebuilds
-    # the same pipeline over the same input (bench reps, repeated
-    # queries) re-paid its ~1 s of fixed latency for a deterministic
-    # answer.
-    def hottest_group() -> int:
-        stats = (
-            event_rows.select("cname", "ckey", "epoch")
-            .unionByName(tester_rows.select("cname", "ckey", "epoch"))
-            .groupBy("cname", "ckey")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .agg(F.max("n").alias("max_group"))
-            .first()
-        )
-        return stats["max_group"] or 0
-
-    max_group = memo(*probe_key, hottest_group)
-    withn = _running_count(stream, _pick_flexcount_plan(max_group))
+    w = (
+        Window.partitionBy("cname", "ckey")
+        .orderBy("epoch", "k0", "surl", "k1")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    withn = stream.withColumn("_n", F.sum("delta").over(w))
     ok = (
         F.when(F.col("cmp") == "gt", F.col("_n") > F.col("cval"))
         .when(F.col("cmp") == "lt", F.col("_n") < F.col("cval"))
@@ -427,91 +398,6 @@ def _apply_count_tests(
         .select(F.col("surl").alias("url"), F.col("tsid").alias("sid"))
     )
     return tester_src.join(passed_keys, ["url", "sid"], "leftsemi")
-
-
-# A (name, key) group beyond this row count escalates to the epoch-
-# chunked two-phase prefix sum.  r5 calibration (scripts/
-# calibrate_flexcount.py: isolated single-hot-group sweep at 8 pinned
-# cores, interleaved modes, warmup-dropped):
-#
-#   rows/group   single-window   chunked
-#      2×10^5          1.0 s       2.1 s
-#      1×10^6          2.7 s       2.6 s   ← tie
-#      2×10^6          4.5 s       2.2 s
-#      4×10^6         10.2 s       3.7 s
-#      8×10^6         33.4 s       4.9 s
-#     16×10^6         53.1 s       9.2 s
-#
-# The single-task sort degrades super-linearly past ~10^6 rows (sort
-# spill) while chunked stays near-flat.  Threshold 2M rather than the
-# 1M tie point: the r3 FULL-pipeline A/B at 6×10^5 rows showed single
-# clearly faster in context (chunked's extra shuffle competes with
-# concurrent stages), so the default biases to single where the two
-# are close and escalates where chunked wins ≥2×.  (Pre-r5 value was 8M,
-# extrapolated from the 6×10^5 A/B alone.)
-FLEXCOUNT_CHUNK_THRESHOLD = 2_000_000
-FLEXCOUNT_TARGET_CHUNKS = 64
-
-
-def _pick_flexcount_plan(max_group: int) -> str:
-    """Escalation trigger: 'chunked' iff the hottest (name, key) group
-    exceeds the single-task sort threshold."""
-    return "chunked" if max_group > FLEXCOUNT_CHUNK_THRESHOLD else "single"
-
-
-def _running_count(stream: DataFrame, plan: str) -> DataFrame:
-    """The count sweep: ``stream`` plus ``_n`` = running sum(delta) per
-    (name, key) under the total order (epoch, k0, surl, k1).
-
-    ``single``: one window per (name, key) group.  ``chunked``: the
-    epoch-chunked two-phase prefix sum — the hot-key escalation ([U] no
-    upstream analog; upstream's mmap counter is inherently single-
-    threaded per key).  A single (name, key) window group lands in ONE
-    task; for a Zipf-hot key at 100× that task serializes the stage.
-    Phase 1 splits each group into epoch chunks (epoch is the leading
-    sort key, so equal epochs never straddle a chunk) and computes the
-    running sum WITHIN (name, key, chunk) — parallel across chunks of
-    the same hot key.  Phase 2 turns per-chunk totals into per-chunk
-    offsets with a window over the (tiny) chunk-totals frame and
-    broadcast-joins them back: global running sum = local running sum
-    + preceding-chunks offset.  Cost: one extra small shuffle (chunk
-    totals) + a broadcast join — the A/B'd overhead that makes this the
-    escalation path, not the default (see FLEXCOUNT_CHUNK_THRESHOLD)."""
-    order = ("epoch", "k0", "surl", "k1")
-    running = (Window.unboundedPreceding, Window.currentRow)
-    if plan == "single":
-        w = Window.partitionBy("cname", "ckey").orderBy(*order).rowsBetween(*running)
-        return stream.withColumn("_n", F.sum("delta").over(w))
-    bounds = stream.agg(
-        F.min("epoch").alias("emin"), F.max("epoch").alias("emax")
-    ).first()
-    emin, emax = bounds["emin"], bounds["emax"]
-    if emin is None:
-        return stream.withColumn("_n", F.col("delta").cast("long"))
-    width = max(1, (int(emax) - int(emin) + 1) // FLEXCOUNT_TARGET_CHUNKS)
-    chunked = stream.withColumn(
-        "_chunk", ((F.col("epoch") - F.lit(int(emin))) / F.lit(width)).cast("long")
-    )
-    w_local = (
-        Window.partitionBy("cname", "ckey", "_chunk").orderBy(*order).rowsBetween(*running)
-    )
-    chunked = chunked.withColumn("_ls", F.sum("delta").over(w_local))
-    totals = chunked.groupBy("cname", "ckey", "_chunk").agg(
-        F.sum("delta").alias("_tot")
-    )
-    w_off = (
-        Window.partitionBy("cname", "ckey")
-        .orderBy("_chunk")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = totals.withColumn("_off", F.sum("_tot").over(w_off)).select(
-        "cname", "ckey", "_chunk", "_off"
-    )
-    return (
-        chunked.join(F.broadcast(offsets), ["cname", "ckey", "_chunk"], "left")
-        .withColumn("_n", F.col("_ls") + F.coalesce(F.col("_off"), F.lit(0)))
-        .drop("_chunk", "_ls", "_off")
-    )
 
 
 def bit_values_sql(rules: list[Rule]) -> tuple[str, str]:

@@ -4,10 +4,15 @@ set+test ordering."""
 
 from __future__ import annotations
 
+import random
+import re
+
+import duckdb
+import pyarrow as pa
+import pytest
 from pyspark.sql import functions as F
 
-from sagan_spark.gates import xbits
-from sagan_spark.gates.xbits import apply_gates
+from sagan_spark.gates.xbits import apply_gates, bit_tests_sql
 from sagan_spark.rules.model import AfterGate, Rule, ThresholdGate, XbitOp
 
 COLS = "sid long, url string, domain string, warc_epoch long, src_ip string, dst_ip string, source string"
@@ -142,100 +147,106 @@ COUNT_RULE = Rule(
 COUNT_ROWS = _rows(10, [0, 10, 20]) + _rows(14, [5, 15, 105, 115, 130])
 
 
-def _flexcount_plan(df) -> str:
-    """The running-count plan apply_gates built: only the chunked form
-    adds a ``_chunk`` column."""
-    plan = df._jdf.queryExecution().analyzed().toString()
-    return "chunked" if "_chunk" in plan else "single"
+def test_flexbits_count_running_sum(spark):
+    """The running count over set(+1) / expiry(-1) rows per (name, key):
+    each tester passes iff the unexpired set count at its position is
+    above 1."""
 
+    def kept(rows, setter=SET_RULE):
+        return _kept_epochs(apply_gates(_frame(spark, rows), [setter, COUNT_RULE]), 14)
 
-def _count_run(spark, monkeypatch, threshold=None, frame=None, setter=SET_RULE):
-    """(kept count-tester epochs, flexcount plan) for one build."""
-    if threshold is not None:
-        monkeypatch.setattr(xbits, "FLEXCOUNT_CHUNK_THRESHOLD", threshold)
-    frame = _frame(spark, COUNT_ROWS) if frame is None else frame
-    out = apply_gates(frame, [setter, COUNT_RULE])
-    return _kept_epochs(out, 14), _flexcount_plan(out)
-
-
-def test_flexbits_count_single_vs_chunked_agree(spark, monkeypatch):
-    """The epoch-chunked two-phase prefix sum is semantics-identical to
-    the single-window running sum (the hot-key escalation path)."""
-    expected = [15, 105]  # count>1 at those tester times
-    assert _count_run(spark, monkeypatch) == (expected, "single")
-    # synthetic hot key: drop the threshold below this group's size
-    assert _count_run(spark, monkeypatch, threshold=3) == (expected, "chunked")
-
-
-def test_flexbits_count_trigger_flips_on_hot_key(spark, monkeypatch):
-    """The plan is 'single' for small groups and escalates to 'chunked'
-    once the hottest (name, key) group crosses the row threshold."""
-    # the one (bit, d1) group holds 3 sets + 3 expiries + 5 testers
-    _, plan = _count_run(spark, monkeypatch, threshold=11)
-    assert plan == "single"
-    _, plan = _count_run(spark, monkeypatch, threshold=10)
-    assert plan == "chunked"
-    assert xbits._pick_flexcount_plan(10**9) == "chunked"
-
-
-def test_flexcount_threshold_is_the_calibrated_value():
-    """Pin the r5-calibrated crossover (scripts/calibrate_flexcount.py:
-    single-window degrades super-linearly past ~10^6 rows/group while
-    chunked stays flat; tie at 1M, chunked 2x at 2M).  The default must
-    flip exactly above 2M rows/group."""
-    assert xbits.FLEXCOUNT_CHUNK_THRESHOLD == 2_000_000
-    assert xbits._pick_flexcount_plan(2_000_000) == "single"
-    assert xbits._pick_flexcount_plan(2_000_001) == "chunked"
-
-
-def test_flexcount_probe_memo(spark, monkeypatch, memo_store):
-    """The hottest-group probe is memoized per (upstream input, gate
-    specs): a second build over the same input must not re-run the
-    stats job (bench reps / repeated queries re-paid ~1 s of fixed
-    latency per plan build), and a ruleset with the same count specs
-    but different writers probes a different stream, so it must not
-    share the entry (ADVICE r5)."""
-    # NOTE: reuse the SAME DataFrame object — a fresh createDataFrame
-    # local relation gets new expression ids and a different semantic
-    # hash (memo miss, re-probe, correct but uncached).  The production
-    # shape (spark.read.parquet of the same path) hashes stably.
-    frame = _frame(spark, COUNT_ROWS + _rows(17, [1]))
-    assert _count_run(spark, monkeypatch, frame=frame) == ([15, 105], "single")
-    assert len(memo_store) == 1
-    # poison the cached value: if the second build re-probed, the memo
-    # entry would be overwritten back to the true count; if it read the
-    # memo, the poisoned value forces the chunked plan while results
-    # stay identical (plan choice never changes semantics)
-    (key,) = memo_store
-    memo_store[key] = 10**9
-    assert _count_run(spark, monkeypatch, frame=frame) == ([15, 105], "chunked")
-    # sid 17 sets the bit once, so the count never exceeds 1; re-probed,
-    # not served the poisoned entry
-    other_setter = Rule(
+    assert kept(COUNT_ROWS) == [15, 105]
+    # a fourth set at t=30 lifts the count above 1 at t=115 too
+    assert kept(COUNT_ROWS + _rows(10, [30])) == [15, 105, 115]
+    # sid 17 sets the bit once, so the count never exceeds 1
+    one_setter = Rule(
         sid=17, xbits=(XbitOp(op="set", name="bit", track="by_domain", expire=100),)
     )
-    assert _count_run(spark, monkeypatch, frame=frame, setter=other_setter) == (
-        [],
-        "single",
-    )
-    assert len(memo_store) == 2
+    assert kept(COUNT_ROWS + _rows(17, [1]), setter=one_setter) == []
 
 
-def test_flexcount_probe_reruns_after_in_place_rewrite(
-    spark, monkeypatch, tmp_path, memo_store
-):
-    """A parquet path rewritten in place keeps its plan's semantic hash,
-    but the probe memo must see the new files: the second build re-runs
-    the probe and picks the chunked plan for the hotter group."""
-    path = str(tmp_path / "alerts")
+def test_count_gates_run_no_probe(spark, memo_store):
+    """Building count gates caches nothing and plans one running window
+    per (name, key): no driver-side job decides the plan."""
+    out = apply_gates(_frame(spark, COUNT_ROWS), [SET_RULE, COUNT_RULE])
+    assert memo_store == {}
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    windows = re.findall(r"Window \[.*\], \[(.*?)\], \[", plan)
+    assert [re.sub(r"#\d+L?", "", w) for w in windows] == ["cname, ckey"]
 
-    def build(rows):
-        _frame(spark, rows).write.mode("overwrite").parquet(path)
-        return _count_run(spark, monkeypatch, threshold=11, frame=spark.read.parquet(path))
 
-    # the (bit, d1) group: 3 sets + 3 expiries + 5 testers = 11 rows
-    assert build(COUNT_ROWS) == ([15, 105], "single")
-    # a fourth set at t=30 makes the group 13 rows, past the threshold,
-    # and lifts the count above 1 at t=115 too
-    assert build(COUNT_ROWS + _rows(10, [30])) == ([15, 105, 115], "chunked")
-    assert len(memo_store) == 2
+# Parity rules: setters with no, zero and positive expiry plus an unset
+# on name "c", a second name "d" keyed by source IP, and gt/lt/eq
+# testers (sid 34 carries two tests that must both pass).
+_PARITY_RULES = [
+    Rule(sid=21, xbits=(XbitOp(op="set", name="c", track="by_domain"),)),
+    Rule(sid=22, xbits=(XbitOp(op="set", name="c", track="by_domain", expire=0),)),
+    Rule(sid=23, xbits=(XbitOp(op="set", name="c", track="by_domain", expire=40),)),
+    Rule(sid=24, xbits=(XbitOp(op="unset", name="c", track="by_domain"),)),
+    Rule(sid=25, xbits=(XbitOp(op="set", name="d", track="by_src", expire=30),)),
+    Rule(sid=31, xbits=(XbitOp(op="count", name="c", track="by_domain", cmp="gt", value=3),)),
+    Rule(sid=32, xbits=(XbitOp(op="count", name="c", track="by_domain", cmp="lt", value=5),)),
+    Rule(sid=33, xbits=(XbitOp(op="count", name="c", track="by_domain", cmp="eq", value=2),)),
+    Rule(
+        sid=34,
+        xbits=(
+            XbitOp(op="count", name="c", track="by_domain", cmp="gt", value=1),
+            XbitOp(op="count", name="d", track="by_src", cmp="lt", value=3),
+        ),
+    ),
+    Rule(sid=35, xbits=(XbitOp(op="count", name="d", track="by_src", cmp="gt", value=0),)),
+]
+# columns bit_tests_sql selects beyond COLS; the parity frame leaves them NULL
+_ORACLE_PAD = (
+    "text lang ips port_x port2_x proto_x md5_x sha1_x sha256_x port dst_port "
+    "proto hash classtype country_track country_is country_isnot sink rev "
+    "after_track after_count after_seconds th_type th_track th_count "
+    "th_seconds src_cc dst_cc priority description"
+).split()
+
+
+def _parity_rows(seed: int) -> list[tuple]:
+    """Pages, each matching a random subset of the parity sids: one hot
+    domain of a few thousand alert rows plus cold domains.  Epochs are
+    dense, so sets and testers share epochs, and url order is random
+    against epoch order."""
+    rng = random.Random(seed)
+    sids = [r.sid for r in _PARITY_RULES]
+    # one weight per _PARITY_RULES entry: sets that expire after 40 s are
+    # the most common and never-expiring sets the rarest, so the hot
+    # group's count rises and falls instead of only growing
+    weights = [1, 2, 6, 2, 3, 2, 2, 2, 2, 2]
+    pages = [("hot", rng.randrange(600)) for _ in range(1500)]
+    pages += [(f"cold{rng.randrange(40)}", rng.randrange(600)) for _ in range(400)]
+    rows = []
+    for i, (domain, epoch) in enumerate(pages):
+        url = f"u{rng.randrange(10**6):06d}-{i}"
+        src = f"10.0.0.{rng.randrange(8)}"
+        for sid in set(rng.choices(sids, weights, k=rng.randint(1, 3))):
+            rows.append((sid, url, domain, epoch, src, "192.168.0.1", "s"))
+    return rows
+
+
+@pytest.mark.parametrize("seed", [1, 2])
+def test_flexbits_count_matches_duckdb_twin(spark, seed):
+    """Count gates keep the same (url, sid) set as the DuckDB twin's
+    join+filter formulation, on a hot group, equal-epoch set/tester
+    pairs, None/0/positive expiries and unset rows."""
+    rows = _parity_rows(seed)
+    out = apply_gates(_frame(spark, rows), _PARITY_RULES)
+    got = {(r["url"], r["sid"]) for r in out.select("url", "sid").collect()}
+
+    names = [c.split()[0] for c in COLS.split(", ")]
+    base = pa.table({c: [r[i] for r in rows] for i, c in enumerate(names)})
+    pad = ", ".join(f"NULL AS {c}" for c in _ORACLE_PAD)
+    with duckdb.connect() as con:
+        con.register("base", base)
+        con.execute(f"CREATE VIEW wgated AS SELECT *, {pad} FROM base")
+        sql = f"SELECT url, sid FROM ({bit_tests_sql(_PARITY_RULES)})"
+        want = set(con.execute(sql).fetchall())
+    assert got == want
+    # not vacuous: every tester rule keeps some rows and drops others
+    for sid in (31, 32, 33, 34, 35):
+        n_in = sum(r[0] == sid for r in rows)
+        n_kept = sum(s == sid for _, s in got)
+        assert 0 < n_kept < n_in, (sid, n_kept, n_in)
