@@ -1,28 +1,25 @@
-"""xbits / flexbits as join-back state tables (SURVEY.md §2.6 A4-A5,
+"""xbits / flexbits as one running-window sweep (SURVEY.md §2.6 A4-A5,
 §3.3; [U] upstream src/xbit.c, src/xbit-mmap.c, src/flexbit.c).
 
-Batch re-expression of the mmap bit store:
+Batch re-expression of the mmap bit store: ``set`` / ``unset`` matches
+become rows of a **bit-event table** ``(name, key, warc_epoch, url, op,
+expire)``; isset / isnotset / count testers read it under the
+deterministic total order ``(warc_epoch, url)`` (same-page
+set-then-test is visible, mirroring the reference's in-message rule
+ordering).  A bit is *set* iff the latest event is a ``set`` AND the
+tester is strictly inside its expiry window (``t < set.epoch +
+expire`` — a tester exactly at the boundary sees the bit cleared,
+FIXTURES.md F4); see :func:`_apply_bit_tests`.
 
-  * ``set`` / ``unset`` matches become rows of a **bit-event table**
-    ``(name, key, warc_epoch, url, op, expire)``.
-  * ``isset`` / ``isnotset`` testers LEFT-join back to the latest bit
-    event at-or-before their own event time, under the deterministic
-    total order ``(warc_epoch, url)`` (same-page set-then-test is
-    visible, mirroring the reference's in-message rule ordering).
-  * The bit is *set* iff that latest event is a ``set`` AND the tester
-    is strictly inside the expiry window
-    (``t.epoch < set.epoch + expire`` — a tester exactly at the expiry
-    boundary sees the bit cleared, FIXTURES.md F4).
-
-Scale: the join is equi on (name, key) with a range residual — a
-shuffled hash join; hot keys ride on AQE skew splitting.  At 10^12
-rows the bit-event table is partition-pruned by the same warc_ts
-partitioning as the pages table (events can only affect testers within
-max-expire of their partition, so per-partition processing carries a
-bounded look-back tail — see runner/ checkpoint notes).
+Scale: at 10^12 rows the bit-event table is partition-pruned by the
+same warc_ts partitioning as the pages table (events can only affect
+testers within max-expire of their partition, so per-partition
+processing carries a bounded look-back tail — see runner/ notes).
 """
 
 from __future__ import annotations
+
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -59,12 +56,13 @@ def bit_count_rows(rules: list[Rule]) -> list[tuple]:
 
 
 def _reject_mixed_bit_families(tests: list[tuple], counts: list[tuple]) -> None:
-    """A rule carrying BOTH count tests and isset/isnotset tests would
-    be routed through two independent gate branches here (each with its
-    own ALL-pass aggregate), double-emitting rows that pass both and
-    mis-emitting rows that pass only one.  No fixture or synth rule
-    mixes the families ([U] upstream rules don't either); reject loudly
-    in engine, oracle and streaming rather than silently diverge."""
+    """The batch sweep aggregates all of a rule's tests at once, but the
+    DuckDB twin (:func:`bit_tests_sql`) still runs count and isset/
+    isnotset testers as two branches, each with its own ALL-pass
+    aggregate: a rule carrying both families would double-emit rows
+    that pass both and mis-emit rows that pass only one.  No fixture or
+    synth rule mixes the families ([U] upstream rules don't either);
+    reject loudly in engine, oracle and streaming rather than diverge."""
     mixed = sorted({t[0] for t in tests} & {c[0] for c in counts})
     if mixed:
         raise ValueError(
@@ -95,14 +93,15 @@ def apply_gates(df: DataFrame, rules: list[Rule]) -> DataFrame:
 
     ONE staging barrier: the keyed alert stream is staged once when
     some rule has a window gate or a bit test.  Every branch (window-
-    gated rows, pass-through rows, bit events, isset testers, count
-    testers) then sources its sid subset from that snapshot instead of
-    recomputing the upstream match plan.  The window computation
-    re-runs only inside branches whose sids are themselves window-
-    gated: when those sids and the bit-op sids are disjoint (the common
-    ruleset shape, and the fixture's), the windows run exactly once;
-    when they overlap, the (small) window-gated subset is staged too so
-    each overlapping branch reads a scan instead of re-sorting."""
+    gated rows, pass-through rows, bit events, bit testers) then
+    sources its sid subset from that snapshot instead of recomputing
+    the upstream match plan.  All isset / isnotset / count testers go
+    through ONE sweep (:func:`_apply_bit_tests`).  The window
+    computation re-runs only inside branches whose sids are themselves
+    window-gated: when those sids and the bit-op sids are disjoint (the
+    common ruleset shape, and the fixture's), the windows run exactly
+    once; when they overlap, the (small) window-gated subset is staged
+    too so each overlapping branch reads a scan instead of re-sorting."""
     writes, tests = bit_ops_rows(rules)
     counts = bit_count_rows(rules)
     _reject_mixed_bit_families(tests, counts)
@@ -115,9 +114,8 @@ def apply_gates(df: DataFrame, rules: list[Rule]) -> DataFrame:
     if not (tests or counts):
         return rest if win is None else win.unionByName(rest)
     writer_sids = {w[0] for w in writes}
-    tester_sids = {t[0] for t in tests}
-    count_sids = {c[0] for c in counts}
-    if win_sids & (writer_sids | tester_sids | count_sids):
+    test_sids = {t[0] for t in tests} | {c[0] for c in counts}
+    if win_sids & (writer_sids | test_sids):
         # ≥2 branches would re-run the window sort — stage the (small)
         # window-gated subset once instead
         win = stage_frame(win, "wingate")
@@ -140,262 +138,157 @@ def apply_gates(df: DataFrame, rules: list[Rule]) -> DataFrame:
                 parts.append(rest.where(F.col("sid").isin(in_rest)))
             if not parts:
                 parts = [rest.where(F.lit(False))]
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+        return reduce(DataFrame.unionByName, parts)
 
     spark = df.sparkSession
     writes_df = local_df(
         spark, writes, "sid long, name string, track string, op string, expire int"
     )
-    out = source(tester_sids | count_sids, exclude=True)
-    if counts:
-        out = out.unionByName(
-            _apply_count_tests(
-                source(count_sids), source(writer_sids), counts, writes_df, spark
-            )
+    return source(test_sids, exclude=True).unionByName(
+        _apply_bit_tests(
+            source(test_sids), source(writer_sids), tests, counts, writes_df, spark
         )
-    if tests:
-        out = out.unionByName(
-            _apply_isset_tests(
-                source(tester_sids), source(writer_sids), tests, writes_df, spark
-            )
-        )
-    return out
+    )
 
 
-def _apply_isset_tests(
+def _apply_bit_tests(
     tester_src: DataFrame,
     event_src: DataFrame,
     tests: list[tuple],
-    writes_df: DataFrame,
-    spark: SparkSession,
-) -> DataFrame:
-    """xbits ``isset`` / ``isnotset`` testers: the passing rows of
-    ``tester_src``.
-
-    Scale-critical formulation: a naive (events × testers) join on
-    (name, key) is O(E·T) **per key** and melts down on hot Zipf
-    domains (measured: a 3-task straggler stage at 80k pages).
-    Instead, events and testers are UNIONed into one stream per
-    (name, key), sorted once by the deterministic total order
-    (epoch, url, kind, writer-sid), and each tester reads the latest
-    bit event via ``last(..., ignorenulls)`` over the running window —
-    one shuffle + sort, linear per key, hot keys are just longer sorted
-    runs (no pairwise blowup).  The DuckDB oracle keeps the join+
-    row_number formulation as an independent cross-check."""
-    tests_df = local_df(spark, tests, "sid long, name string, track string, test_op string")
-
-    # NARROW sweep rows (r4 session 2): tester rows carry only
-    # (url, sid) through the window sort, and survivors are joined back
-    # to the staged tester scan with a LEFT SEMI on (url, sid) — unique
-    # per alert row, uniformly distributed, so the join-back cannot
-    # skew.  Rationale: the sweep's hot (name, key) group lands in ONE
-    # task whose CPU is proportional to row width × group length; a
-    # 4-core event-log profile showed that straggler task AT the stage
-    # wall (11.7 s) while every other core idled.  Carrying the full
-    # 17-column payload struct (the r3 form) made the hot sort ~3×
-    # wider than it needs to be; the semi join-back is linear and
-    # shuffles on unskewed keys.  (This is NOT the r3 melt revisited:
-    # that was a time-range join producing O(sets×testers) rows per
-    # key; this is an equi semi-join on unique keys.)
-    events = bit_events(event_src, writes_df).select(
-        F.col("name").alias("bname"),
-        F.col("key").alias("bkey"),
-        "warc_epoch",
-        "url",
-        F.lit(0).alias("kind"),  # events sort before same-(epoch,url) testers
-        F.struct(
-            F.col("warc_epoch").alias("eepoch"),
-            F.col("esid"),
-            F.col("op").alias("eop"),
-            F.col("expire").alias("eexpire"),
-        ).alias("bev"),
-        F.lit(None).cast("string").alias("test_op"),
-        F.lit(None).cast("long").alias("tsid"),
-    )
-
-    testers = (
-        tester_src
-        .join(F.broadcast(tests_df), "sid", "inner")
-        .select(
-            F.col("name").alias("bname"),
-            track_key_col(F.col("track")).alias("bkey"),
-            F.col("warc_epoch"),
-            F.col("url"),
-            F.lit(1).alias("kind"),
-            F.lit(None)
-            .cast("struct<eepoch: long, esid: long, eop: string, eexpire: int>")
-            .alias("bev"),
-            F.col("test_op"),
-            F.col("sid").alias("tsid"),
-        )
-    )
-
-    stream = events.unionByName(testers)
-    w = (
-        Window.partitionBy("bname", "bkey")
-        .orderBy(
-            "warc_epoch", "url", "kind", F.col("bev.esid").asc_nulls_last()
-        )
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    latest = stream.withColumn("lev", F.last("bev", ignorenulls=True).over(w))
-
-    isset = (
-        F.col("lev").isNotNull()
-        & (F.col("lev.eop") == "set")
-        & (
-            F.col("lev.eexpire").isNull()
-            | (F.col("warc_epoch") < F.col("lev.eepoch") + F.col("lev.eexpire"))
-        )
-    )
-    ok = F.when(F.col("test_op") == "isset", isset).otherwise(~isset)
-    # ALL-pass per alert row: a rule carrying several bit tests emits
-    # its alert iff EVERY test passes (min over the per-test ok flags,
-    # the same rule _apply_count_tests uses) — a bare `where(ok)` +
-    # semi-join would keep the row when ANY single test passed
-    # (ADVICE r4; [U] src/xbit.c chains tests conjunctively).
-    passed_keys = (
-        latest.where(F.col("kind") == 1)
-        .groupBy("url", "tsid")
-        .agg(F.min(ok.cast("int")).alias("_all_ok"))
-        .where(F.col("_all_ok") == 1)
-        .select("url", F.col("tsid").alias("sid"))
-    )
-    return tester_src.join(passed_keys, ["url", "sid"], "leftsemi")
-
-
-def _apply_count_tests(
-    tester_src: DataFrame,
-    event_src: DataFrame,
     counts: list[tuple],
     writes_df: DataFrame,
     spark: SparkSession,
 ) -> DataFrame:
-    """flexbits ``count`` testers ([U] src/flexbit.c counter form).
+    """The passing rows of ``tester_src`` under its xbits ``isset`` /
+    ``isnotset`` and flexbits ``count`` tests ([U] src/flexbit.c).
 
     Semantics (fixture-defining, mirrored in :func:`bit_tests_sql`):
-    the counter value at a tester's event time is the number of
-    UNEXPIRED ``set`` events for (name, key) at-or-before it under the
-    total order (warc_epoch, url); ``unset`` does not decrement.  The
-    tester passes iff ``count <cmp> value`` for ALL of its count tests.
+    isset / isnotset read the LATEST bit event at-or-before the tester;
+    count reads the number of UNEXPIRED ``set`` events at-or-before it
+    (``unset`` does not decrement) and passes iff ``count <cmp> value``.
+    A tester row passes iff ALL of its rule's tests pass.
 
-    Scale shape (r3 fix): the first cut was a LEFT equi-join on
-    (name, key) with time/expiry residuals + a per-tester count.  That
-    join's output is O(sets × testers) **per key** — on the fixture's
-    hot Zipf domain at 320k pages it emits ~10^9 rows inside one key
-    group and a 2-core bench cell ran 6 minutes per rep (correct at
-    rep=4, melted at rep=64: the exact hot-key pathology the isset path
-    already avoids).  Count needs the event multiset, but a COUNT over
-    a multiset is a RUNNING SUM over a sorted stream: union set(+1) /
-    expiry(-1) / tester(read) rows per (name, key), sort once by the
-    deterministic total order, take sum(delta) over the running window.
-    One shuffle + sort, linear per key — hot keys are longer sorted
-    runs, never a pairwise blowup.  A (name, key) group sorts in one
-    task; the epoch-chunked alternative lost below ~10^6 rows per
-    group (BASELINE.md), so this is the only plan.
+    Scale shape: an (events × testers) join on (name, key) is
+    O(sets × testers) per key and melted on the hot Zipf domain (r3).
+    Instead events, expiry rows and testers are UNIONed into one stream
+    per (name, key), sorted once, and each tester reads both answers
+    off ONE running window: ``last(bev, ignorenulls)`` is the latest
+    event, ``sum(delta)`` the count (set +1, expiry -1).  Linear per
+    key; hot keys are longer sorted runs (an epoch-chunked plan lost
+    below ~10^6 rows per group, BASELINE.md).
 
-    Ordering encodes the exact semantics: at equal epoch, expiries
-    (k0=0) precede everything (expired iff t ≥ eepoch+expire), then
-    sets/testers interleave by url with set-before-tester at equal url
-    (counted iff eurl ≤ url).  Sets with expire ≤ 0 can never be
-    counted ((eepoch ≤ t) ∧ (t < eepoch) is empty) and are dropped from
-    both streams.
+    The order (epoch, k0, url, kind, esid) encodes the semantics: at
+    equal epoch, expiries (k0=0, no ``bev``) precede everything
+    (expired iff t ≥ eepoch+expire), then events and testers interleave
+    by url, event before tester at equal url, events by writer sid.  A
+    set with expire ≤ 0 can be the latest event but never counts.
 
-    Stage economy: tester rows ride the sweep as NARROW (url, sid)
-    keys (r4 session 2 — a full-payload carry made the hot key group's
-    single sort task ~3× wider than needed and that straggler task WAS
-    the stage wall in a 4-core profile), a set row emits its optional
-    expiry row via one explode, ALL-tests-pass aggregates min(ok) over
-    the scalar (url, sid) group, and survivors LEFT-SEMI join back to
-    the staged tester scan on that unique, unskewed pair.  The DuckDB
-    oracle keeps the join+filter formulation as an independent
-    cross-check."""
-    cdf = local_df(spark, counts, "sid long, name string, track string, cmp string, cval int")
-    # NARROW sweep rows (r4 session 2, same rationale as the isset
-    # sweep): testers ride as (surl=url, tsid=sid) only; survivors semi-
-    # join back to the staged tester scan on the unique, unskewed
-    # (url, sid) pair.  The ALL-tests aggregation groups on those two
-    # scalar keys instead of the full 17-column payload struct.
-    tester_rows = tester_src.join(F.broadcast(cdf), "sid", "inner").select(
-        F.col("name").alias("cname"),
-        track_key_col(F.col("track")).alias("ckey"),
-        F.col("warc_epoch").alias("epoch"),
-        F.lit(1).alias("k0"),
-        F.col("url").alias("surl"),
-        F.lit(1).alias("k1"),
-        F.lit(0).alias("delta"),
-        "cmp",
-        "cval",
-        F.col("sid").alias("tsid"),
+    Testers ride the sweep as NARROW (url, sid) keys (r4: a full-payload
+    carry made the hot group's single sort task ~3× wider, and that task
+    WAS the stage wall); min(ok) over (url, sid) is the ALL-pass
+    aggregate, and survivors LEFT-SEMI join back to the staged tester
+    scan on that unique, unskewed pair.  The DuckDB oracle keeps the
+    join formulation as an independent cross-check."""
+    tests_df = local_df(
+        spark,
+        [(sid, name, track, op, None, None) for sid, name, track, op in tests]
+        + [(sid, name, track, "count", c, v) for sid, name, track, c, v in counts],
+        "sid long, name string, track string, test_op string, cmp string, cval int",
     )
-    sets = (
-        bit_events(event_src, writes_df)
-        .where(F.col("op") == "set")
-        .where(F.col("name").isin([c[1] for c in counts]))
-        .where(F.col("expire").isNull() | (F.col("expire") > 0))
+    bev_t = "struct<eepoch: long, esid: long, eop: string, eexpire: int>"
+    live_set = (
+        (F.col("op") == "set")
+        & F.col("name").isin(sorted({c[1] for c in counts}))
+        & (F.col("expire").isNull() | (F.col("expire") > 0))
     )
-    # one scan → (+1 at the set position) and (-1 at its expiry) rows
+    # one scan → the event row (+1 iff a counted live set) and, for such
+    # a set with an expire, its (-1) expiry row
     ev_pair = F.array(
         F.struct(
             F.col("warc_epoch").cast("long").alias("epoch"),
             F.lit(1).alias("k0"),
-            F.col("url").alias("surl"),
-            F.lit(0).alias("k1"),
-            F.lit(1).alias("delta"),
+            F.col("url"),
+            F.struct(
+                F.col("warc_epoch").alias("eepoch"),
+                F.col("esid"),
+                F.col("op").alias("eop"),
+                F.col("expire").alias("eexpire"),
+            ).alias("bev"),
+            live_set.cast("int").alias("delta"),
         ),
         F.when(
-            F.col("expire").isNotNull(),
+            live_set & F.col("expire").isNotNull(),
             F.struct(
                 (F.col("warc_epoch") + F.col("expire")).cast("long").alias("epoch"),
                 F.lit(0).alias("k0"),
-                F.lit("").alias("surl"),
-                F.lit(0).alias("k1"),
+                F.lit("").alias("url"),
+                F.lit(None).cast(bev_t).alias("bev"),
                 F.lit(-1).alias("delta"),
             ),
         ),
     )
-    event_rows = (
-        sets.select(
-            F.col("name").alias("cname"),
-            F.col("key").alias("ckey"),
-            F.explode(ev_pair).alias("e"),
-        )
+    tested = sorted({t[1] for t in tests} | {c[1] for c in counts})
+    events = (
+        bit_events(event_src, writes_df)
+        .where(F.col("name").isin(tested))
+        .select("name", "key", F.explode(ev_pair).alias("e"))
         .where(F.col("e").isNotNull())
         .select(
-            "cname",
-            "ckey",
-            F.col("e.epoch").alias("epoch"),
-            F.col("e.k0").alias("k0"),
-            F.col("e.surl").alias("surl"),
-            F.col("e.k1").alias("k1"),
-            F.col("e.delta").alias("delta"),
+            F.col("name").alias("bname"),
+            F.col("key").alias("bkey"),
+            "e.*",
+            F.lit(0).alias("kind"),
+            F.lit(None).cast("string").alias("test_op"),
             F.lit(None).cast("string").alias("cmp"),
             F.lit(None).cast("int").alias("cval"),
             F.lit(None).cast("long").alias("tsid"),
         )
     )
-    stream = event_rows.unionByName(tester_rows)
+    testers = tester_src.join(F.broadcast(tests_df), "sid", "inner").select(
+        F.col("name").alias("bname"),
+        track_key_col(F.col("track")).alias("bkey"),
+        F.col("warc_epoch").cast("long").alias("epoch"),
+        F.lit(1).alias("k0"),
+        "url",
+        F.lit(None).cast(bev_t).alias("bev"),
+        F.lit(0).alias("delta"),
+        F.lit(1).alias("kind"),
+        "test_op",
+        "cmp",
+        "cval",
+        F.col("sid").alias("tsid"),
+    )
     w = (
-        Window.partitionBy("cname", "ckey")
-        .orderBy("epoch", "k0", "surl", "k1")
+        Window.partitionBy("bname", "bkey")
+        .orderBy("epoch", "k0", "url", "kind", F.col("bev.esid").asc_nulls_last())
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    withn = stream.withColumn("_n", F.sum("delta").over(w))
+    swept = events.unionByName(testers).select(
+        "url", "epoch", "kind", "tsid", "test_op", "cmp", "cval",
+        F.last("bev", ignorenulls=True).over(w).alias("lev"),
+        F.sum("delta").over(w).alias("n"),
+    )
+    isset = (
+        F.col("lev").isNotNull()
+        & (F.col("lev.eop") == "set")
+        & (
+            F.col("lev.eexpire").isNull()
+            | (F.col("epoch") < F.col("lev.eepoch") + F.col("lev.eexpire"))
+        )
+    )
     ok = (
-        F.when(F.col("cmp") == "gt", F.col("_n") > F.col("cval"))
-        .when(F.col("cmp") == "lt", F.col("_n") < F.col("cval"))
-        .otherwise(F.col("_n") == F.col("cval"))
+        F.when(F.col("test_op") == "isset", isset)
+        .when(F.col("test_op") == "isnotset", ~isset)
+        .when(F.col("cmp") == "gt", F.col("n") > F.col("cval"))
+        .when(F.col("cmp") == "lt", F.col("n") < F.col("cval"))
+        .otherwise(F.col("n") == F.col("cval"))
     )
     passed_keys = (
-        withn.withColumn("_ok", ok)
-        .where(F.col("k1") == 1)
-        .groupBy("surl", "tsid")
-        .agg(F.min(F.col("_ok").cast("int")).alias("_all_ok"))
+        swept.where(F.col("kind") == 1)
+        .groupBy("url", "tsid")
+        .agg(F.min(ok.cast("int")).alias("_all_ok"))
         .where(F.col("_all_ok") == 1)
-        .select(F.col("surl").alias("url"), F.col("tsid").alias("sid"))
+        .select("url", F.col("tsid").alias("sid"))
     )
     return tester_src.join(passed_keys, ["url", "sid"], "leftsemi")
 
@@ -443,7 +336,7 @@ def bit_tests_sql(rules: list[Rule], rel: str = "wgated") -> str:
             for sid, name, track, cmp, val in counts
         )
         cv = f"(VALUES {cvals}) AS bc(sid, name, track, cmp, cval)"
-        ckey = track_key_sql("bc.track", prefix="t2.")
+        count_key = track_key_sql("bc.track", prefix="t2.")
         count_branch = f"""
 UNION ALL
 SELECT {cols} FROM {rel} t
@@ -456,7 +349,7 @@ WHERE t.sid IN ({", ".join(str(c[0]) for c in counts)})
         SELECT bw.name AS ename, {ekey} AS ekey, g.warc_epoch AS eepoch,
                g.url AS eurl, bw.expire AS eexpire
         FROM {rel} g JOIN {wv} ON g.sid = bw.sid WHERE bw.op = 'set'
-      ) ev ON ev.ename = bc.name AND ev.ekey = {ckey}
+      ) ev ON ev.ename = bc.name AND ev.ekey = {count_key}
           AND (ev.eepoch < t2.warc_epoch
                OR (ev.eepoch = t2.warc_epoch AND ev.eurl <= t2.url))
           AND (ev.eexpire IS NULL OR t2.warc_epoch < ev.eepoch + ev.eexpire)

@@ -156,7 +156,6 @@ def run_partitioned(
         )
         routed = routed.persist()
         try:
-            n_routed = routed.count()
             sink_counts = {
                 f"{r['sink']}/{r['signature_id']}": r["n"]
                 for r in routed.groupBy("sink", "signature_id")
@@ -174,7 +173,7 @@ def run_partitioned(
 
         metrics = {
             "input_rows": n_input,
-            "routed_rows": n_routed,
+            "routed_rows": sum(sink_counts.values()),
             "sink_counts": sink_counts,
             "wall_s": round(time.time() - t_start, 3),
         }

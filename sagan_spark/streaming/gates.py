@@ -32,23 +32,22 @@ STATE_SCHEMA = "epochs array<long>"
 def _rolling_fn(count: int, seconds: int, mode: str):
     """mode='after': emit once rolling count > N (boundary-inclusive,
     same as batch rangeBetween(-S, 0)); mode='suppress': emit while
-    rolling count <= N."""
+    rolling count <= N.  In-order arrival makes state + sorted batch
+    one sorted run ``ts``, so a row's count is a prefix difference:
+    one binary search per row, no per-row buffer rebuild."""
+    import numpy as np
     import pandas as pd
 
     def fn(key, pdf_iter, state):
-        buf = list(state.get[0]) if state.exists else []
-        frames = list(pdf_iter)
-        rows = pd.concat(frames, ignore_index=True)
+        old = np.asarray(state.get[0] if state.exists else [], dtype=np.int64)
+        rows = pd.concat(list(pdf_iter), ignore_index=True)
         rows = rows.sort_values(["warc_epoch", "url"], ignore_index=True)
-        keep = []
-        for t in rows["warc_epoch"]:
-            t = int(t)
-            buf.append(t)
-            buf = [x for x in buf if x >= t - seconds]
-            n = len(buf)
-            keep.append(n > count if mode == "after" else n <= count)
-        state.update((buf,))
-        out = rows[pd.Series(keep)]
+        t = rows["warc_epoch"].to_numpy(dtype=np.int64)
+        ts = np.concatenate([old, t])
+        pos = np.arange(len(old), len(ts))
+        n = pos + 1 - np.searchsorted(ts, t - seconds, "left")
+        state.update(([int(x) for x in ts[ts >= t[-1] - seconds]],))
+        out = rows[n > count if mode == "after" else n <= count]
         yield out[["url", "domain", "warc_epoch", "sid"]]
 
     return fn
@@ -102,11 +101,10 @@ def _bit_fn():
 
     Tester rows carry ALL of their rule's test specs in ``cmps``
     ("name␟isset|name␟count␟gt␟2"); the row is emitted iff EVERY spec
-    passes — the streaming twin of the batch min(_ok) ALL-pass
-    aggregates.  Rows are processed in the batch path's total order
-    (warc_epoch, url, kind, sid): writer rows (kind=0) update the state
-    — same-url set-before-tester matches the batch (epoch, k0, surl,
-    k1) order — tester rows (kind=1) evaluate against it."""
+    passes — the streaming twin of the batch min(ok) ALL-pass
+    aggregate.  Rows are processed in the batch sweep's total order
+    (warc_epoch, url, kind, sid): writer rows (kind=0) update the state,
+    tester rows (kind=1) evaluate against it."""
     import pandas as pd
 
     def fn(key, pdf_iter, state):

@@ -166,18 +166,21 @@ def test_flexbits_count_running_sum(spark):
 
 
 def test_count_gates_run_no_probe(spark, memo_store):
-    """Building count gates caches nothing and plans one running window
-    per (name, key): no driver-side job decides the plan."""
-    out = apply_gates(_frame(spark, COUNT_ROWS), [SET_RULE, COUNT_RULE])
+    """isset and count tests on one name share ONE running window per
+    (name, key), and building them caches nothing: no driver-side job
+    decides the plan."""
+    rows = COUNT_ROWS + _rows(12, [50, 150])
+    out = apply_gates(_frame(spark, rows), [SET_RULE, COUNT_RULE, ISSET_RULE])
     assert memo_store == {}
     plan = out._jdf.queryExecution().optimizedPlan().toString()
     windows = re.findall(r"Window \[.*\], \[(.*?)\], \[", plan)
-    assert [re.sub(r"#\d+L?", "", w) for w in windows] == ["cname, ckey"]
+    assert [re.sub(r"#\d+L?", "", w) for w in windows] == ["bname, bkey"]
 
 
 # Parity rules: setters with no, zero and positive expiry plus an unset
 # on name "c", a second name "d" keyed by source IP, and gt/lt/eq
-# testers (sid 34 carries two tests that must both pass).
+# testers (sid 34 carries two tests that must both pass), and isset /
+# isnotset testers on the same names and keys (sid 38 carries both).
 _PARITY_RULES = [
     Rule(sid=21, xbits=(XbitOp(op="set", name="c", track="by_domain"),)),
     Rule(sid=22, xbits=(XbitOp(op="set", name="c", track="by_domain", expire=0),)),
@@ -195,6 +198,15 @@ _PARITY_RULES = [
         ),
     ),
     Rule(sid=35, xbits=(XbitOp(op="count", name="d", track="by_src", cmp="gt", value=0),)),
+    Rule(sid=36, xbits=(XbitOp(op="isset", name="c", track="by_domain"),)),
+    Rule(sid=37, xbits=(XbitOp(op="isnotset", name="d", track="by_src"),)),
+    Rule(
+        sid=38,
+        xbits=(
+            XbitOp(op="isset", name="c", track="by_domain"),
+            XbitOp(op="isnotset", name="d", track="by_src"),
+        ),
+    ),
 ]
 # columns bit_tests_sql selects beyond COLS; the parity frame leaves them NULL
 _ORACLE_PAD = (
@@ -215,7 +227,7 @@ def _parity_rows(seed: int) -> list[tuple]:
     # one weight per _PARITY_RULES entry: sets that expire after 40 s are
     # the most common and never-expiring sets the rarest, so the hot
     # group's count rises and falls instead of only growing
-    weights = [1, 2, 6, 2, 3, 2, 2, 2, 2, 2]
+    weights = [1, 2, 6, 2, 3, 2, 2, 2, 2, 2, 2, 2, 2]
     pages = [("hot", rng.randrange(600)) for _ in range(1500)]
     pages += [(f"cold{rng.randrange(40)}", rng.randrange(600)) for _ in range(400)]
     rows = []
@@ -228,10 +240,11 @@ def _parity_rows(seed: int) -> list[tuple]:
 
 
 @pytest.mark.parametrize("seed", [1, 2])
-def test_flexbits_count_matches_duckdb_twin(spark, seed):
-    """Count gates keep the same (url, sid) set as the DuckDB twin's
-    join+filter formulation, on a hot group, equal-epoch set/tester
-    pairs, None/0/positive expiries and unset rows."""
+def test_bit_tests_match_duckdb_twin(spark, seed):
+    """Count and isset/isnotset gates, swept together, keep the same
+    (url, sid) set as the DuckDB twin's join formulations, on a hot
+    group, equal-epoch set/tester pairs, None/0/positive expiries and
+    unset rows."""
     rows = _parity_rows(seed)
     out = apply_gates(_frame(spark, rows), _PARITY_RULES)
     got = {(r["url"], r["sid"]) for r in out.select("url", "sid").collect()}
@@ -246,7 +259,7 @@ def test_flexbits_count_matches_duckdb_twin(spark, seed):
         want = set(con.execute(sql).fetchall())
     assert got == want
     # not vacuous: every tester rule keeps some rows and drops others
-    for sid in (31, 32, 33, 34, 35):
+    for sid in (31, 32, 33, 34, 35, 36, 37, 38):
         n_in = sum(r[0] == sid for r in rows)
         n_kept = sum(s == sid for _, s in got)
         assert 0 < n_kept < n_in, (sid, n_kept, n_in)

@@ -318,3 +318,54 @@ def test_streaming_gates_second_micro_batch_match_batch(spark, tmp_path):
     }
     assert got == exp
     assert {sid for _, sid in exp} == set(sids)
+
+
+class _StubState:
+    """The part of ``GroupState`` the rolling kernel uses."""
+
+    def __init__(self):
+        self.exists, self.get = False, None
+
+    def update(self, value):
+        self.exists, self.get = True, value
+
+
+def test_rolling_kernel_matches_brute_force_over_two_batches():
+    """The rolling after/suppress kernel, driven without Spark over two
+    in-order micro-batches with equal-epoch ties (also across the batch
+    boundary), keeps exactly the rows a brute-force rolling count keeps
+    in (warc_epoch, url) processing order."""
+    import itertools
+    import random
+
+    import pandas as pd
+
+    from sagan_spark.streaming.gates import _rolling_fn
+
+    rng = random.Random(7)
+    epochs = sorted(rng.randrange(300) for _ in range(400))
+    # split inside a run of equal epochs, so a tie straddles the batches
+    cut = next(i for i in range(200, 399) if epochs[i] == epochs[i + 1]) + 1
+    batches = []
+    for part in (epochs[:cut], epochs[cut:]):
+        rows = [(f"u{rng.randrange(10**6):06d}", "d", t, 1) for t in part]
+        rng.shuffle(rows)
+        batches.append(pd.DataFrame(rows, columns=["url", "domain", "warc_epoch", "sid"]))
+    order = [
+        (t, u)
+        for b in batches
+        for u, t in sorted(zip(b["url"], b["warc_epoch"]), key=lambda r: (r[1], r[0]))
+    ]
+    seconds = 10  # a window holds about 13 rows on average
+    for count, mode in itertools.product((4, 9, 13), ("after", "suppress")):
+        want = set()
+        for i, (t, u) in enumerate(order):
+            n = sum(1 for s, _ in order[: i + 1] if s >= t - seconds)
+            if (n > count) if mode == "after" else (n <= count):
+                want.add((u, t))
+        fn, state, got = _rolling_fn(count, seconds, mode), _StubState(), set()
+        for b in batches:
+            for out in fn(("1", "d"), iter([b.iloc[:150], b.iloc[150:]]), state):
+                got |= set(zip(out["url"], out["warc_epoch"]))
+        assert got == want and 0 < len(want) < len(order), (count, mode)
+        assert min(state.get[0]) >= order[-1][0] - seconds
