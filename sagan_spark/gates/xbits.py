@@ -55,22 +55,6 @@ def bit_count_rows(rules: list[Rule]) -> list[tuple]:
     ]
 
 
-def _reject_mixed_bit_families(tests: list[tuple], counts: list[tuple]) -> None:
-    """The batch sweep aggregates all of a rule's tests at once, but the
-    DuckDB twin (:func:`bit_tests_sql`) still runs count and isset/
-    isnotset testers as two branches, each with its own ALL-pass
-    aggregate: a rule carrying both families would double-emit rows
-    that pass both and mis-emit rows that pass only one.  No fixture or
-    synth rule mixes the families ([U] upstream rules don't either);
-    reject loudly in engine, oracle and streaming rather than diverge."""
-    mixed = sorted({t[0] for t in tests} & {c[0] for c in counts})
-    if mixed:
-        raise ValueError(
-            f"rules mixing flexbits count tests with xbits isset/isnotset "
-            f"tests are not supported (sids {mixed})"
-        )
-
-
 def bit_events(df: DataFrame, writes_df: DataFrame) -> DataFrame:
     """Gated rows of writer rules → bit-event table."""
     ev = df.join(F.broadcast(writes_df), "sid", "inner")
@@ -104,7 +88,6 @@ def apply_gates(df: DataFrame, rules: list[Rule]) -> DataFrame:
     too so each overlapping branch reads a scan instead of re-sorting."""
     writes, tests = bit_ops_rows(rules)
     counts = bit_count_rows(rules)
-    _reject_mixed_bit_families(tests, counts)
     win_sids = {r.sid for r in rules if r.after or r.threshold}
     df = with_gate_keys(df, rules)
     if not (win_sids or tests or counts):
@@ -308,20 +291,26 @@ def bit_values_sql(rules: list[Rule]) -> tuple[str, str]:
 
 
 def bit_tests_sql(rules: list[Rule], rel: str = "wgated") -> str:
-    """DuckDB twin of the bit-test half of :func:`apply_gates`: returns the full SQL for
-    the bit-gated relation (non-testers UNION passing isset/isnotset
-    testers UNION passing flexbits-count testers)."""
+    """DuckDB twin of the bit-test half of :func:`apply_gates`: returns
+    the full SQL for the bit-gated relation, non-testers UNION the
+    testers whose every bit test passes.
+
+    Join formulation, independent of the engine's sweep: each isset /
+    isnotset test reads the latest event at-or-before the tester (a
+    ``row_number`` over the tester × events join), each count test
+    counts the unexpired sets at-or-before it (a grouped join).  Both
+    families yield per-test ``(url, sid, ok)`` rows; one ``bool_and``
+    per (url, sid) over their UNION ALL is the ALL-pass aggregate, so a
+    rule may mix the families."""
     writes, tests = bit_ops_rows(rules)
     counts = bit_count_rows(rules)
-    _reject_mixed_bit_families(tests, counts)
     if not tests and not counts:
         return f"SELECT * FROM {rel}"
     wv, tv = bit_values_sql(rules)
-    all_tester_sids = ", ".join(
+    tester_sids = ", ".join(
         str(s) for s in sorted({t[0] for t in tests} | {c[0] for c in counts})
     )
     ekey = track_key_sql("bw.track", prefix="g.")
-    tkey = track_key_sql("bt.track", prefix="t.")
     cols = (
         "url, domain, warc_epoch, text, lang, source, sid, ips, port_x, port2_x, proto_x, "
         "md5_x, sha1_x, sha256_x, src_ip, dst_ip, port, dst_port, proto, hash, classtype, "
@@ -329,72 +318,64 @@ def bit_tests_sql(rules: list[Rule], rel: str = "wgated") -> str:
         "after_count, after_seconds, th_type, th_track, th_count, th_seconds, "
         "src_cc, dst_cc, priority, description"
     )
-    count_branch = ""
+    per_test = []
+    if tests:
+        # isset/isnotset: the latest event per (tester, test) decides
+        tkey = track_key_sql("bt.track", prefix="t.")
+        per_test.append(f"""
+  SELECT url, sid,
+    CASE WHEN _test_op = 'isset'
+      THEN coalesce(eop = 'set' AND (eexpire IS NULL OR warc_epoch < eepoch + eexpire), FALSE)
+      ELSE NOT coalesce(eop = 'set' AND (eexpire IS NULL OR warc_epoch < eepoch + eexpire), FALSE)
+    END AS ok
+  FROM (
+    SELECT t.url, t.sid, t.warc_epoch, ev.eop, ev.eexpire, ev.eepoch,
+      row_number() OVER (PARTITION BY t.url, t.sid, bt.name, bt.track, bt.test_op
+                         ORDER BY ev.eepoch DESC NULLS LAST, ev.eurl DESC NULLS LAST,
+                                  ev.esid DESC NULLS LAST) AS _rn,
+      bt.test_op AS _test_op
+    FROM {rel} t
+    JOIN {tv} ON t.sid = bt.sid
+    LEFT JOIN (
+      SELECT bw.name AS ename, {ekey} AS ekey, g.warc_epoch AS eepoch,
+             g.url AS eurl, g.sid AS esid, bw.op AS eop, bw.expire AS eexpire
+      FROM {rel} g JOIN {wv} ON g.sid = bw.sid
+    ) ev ON ev.ename = bt.name AND ev.ekey = {tkey}
+        AND (ev.eepoch < t.warc_epoch
+             OR (ev.eepoch = t.warc_epoch AND ev.eurl <= t.url))
+  ) q WHERE _rn = 1""")
     if counts:
+        # count: unexpired sets at-or-before the tester (unset does not
+        # decrement; expire <= 0 never counts)
         cvals = ", ".join(
             f"({sid}, '{name}', '{track}', '{cmp}', {val})"
             for sid, name, track, cmp, val in counts
         )
         cv = f"(VALUES {cvals}) AS bc(sid, name, track, cmp, cval)"
-        count_key = track_key_sql("bc.track", prefix="t2.")
-        count_branch = f"""
-UNION ALL
-SELECT {cols} FROM {rel} t
-WHERE t.sid IN ({", ".join(str(c[0]) for c in counts)})
-  AND (t.url, t.sid) IN (
-    SELECT (url, sid) FROM (
-      SELECT t2.url, t2.sid, bc.cmp, bc.cval, count(ev.eurl) AS n
-      FROM {rel} t2 JOIN {cv} ON t2.sid = bc.sid
-      LEFT JOIN (
-        SELECT bw.name AS ename, {ekey} AS ekey, g.warc_epoch AS eepoch,
-               g.url AS eurl, bw.expire AS eexpire
-        FROM {rel} g JOIN {wv} ON g.sid = bw.sid WHERE bw.op = 'set'
-      ) ev ON ev.ename = bc.name AND ev.ekey = {count_key}
-          AND (ev.eepoch < t2.warc_epoch
-               OR (ev.eepoch = t2.warc_epoch AND ev.eurl <= t2.url))
-          AND (ev.eexpire IS NULL OR t2.warc_epoch < ev.eepoch + ev.eexpire)
-      GROUP BY t2.url, t2.sid, bc.name, bc.cmp, bc.cval
-    ) GROUP BY url, sid
-    HAVING bool_and(CASE cmp WHEN 'gt' THEN n > cval
-                             WHEN 'lt' THEN n < cval
-                             ELSE n = cval END))
-""".rstrip()
-    if not tests:
-        return (
-            f"SELECT {cols} FROM {rel} WHERE sid NOT IN ({all_tester_sids})"
-            + count_branch
-        )
-    # isset/isnotset branch: per-(url, sid, test-name) latest event →
-    # per-test ok, then ALL-pass per (url, sid) via bool_and — one alert
-    # row iff EVERY bit test on the rule passes, the engine twin of the
-    # min(_all_ok) aggregate above (ADVICE r4 multi-test semantics).
+        ckey = track_key_sql("bc.track", prefix="t2.")
+        per_test.append(f"""
+  SELECT url, sid,
+    CASE cmp WHEN 'gt' THEN n > cval WHEN 'lt' THEN n < cval ELSE n = cval END AS ok
+  FROM (
+    SELECT t2.url, t2.sid, bc.cmp, bc.cval, count(ev.eurl) AS n
+    FROM {rel} t2 JOIN {cv} ON t2.sid = bc.sid
+    LEFT JOIN (
+      SELECT bw.name AS ename, {ekey} AS ekey, g.warc_epoch AS eepoch,
+             g.url AS eurl, bw.expire AS eexpire
+      FROM {rel} g JOIN {wv} ON g.sid = bw.sid WHERE bw.op = 'set'
+    ) ev ON ev.ename = bc.name AND ev.ekey = {ckey}
+        AND (ev.eepoch < t2.warc_epoch
+             OR (ev.eepoch = t2.warc_epoch AND ev.eurl <= t2.url))
+        AND (ev.eexpire IS NULL OR t2.warc_epoch < ev.eepoch + ev.eexpire)
+    GROUP BY t2.url, t2.sid, bc.name, bc.track, bc.cmp, bc.cval
+  ) c""")
+    union = "\n  UNION ALL".join(per_test)
     return f"""
-SELECT {cols} FROM {rel} WHERE sid NOT IN ({all_tester_sids}){count_branch}
+SELECT {cols} FROM {rel} WHERE sid NOT IN ({tester_sids})
 UNION ALL
 SELECT {cols} FROM {rel} t3
-WHERE t3.sid IN ({", ".join(str(s) for s in sorted({t[0] for t in tests}))})
+WHERE t3.sid IN ({tester_sids})
   AND (t3.url, t3.sid) IN (
-  SELECT (url, sid) FROM (
-    SELECT url, sid,
-      CASE WHEN _test_op = 'isset'
-        THEN coalesce(eop = 'set' AND (eexpire IS NULL OR warc_epoch < eepoch + eexpire), FALSE)
-        ELSE NOT coalesce(eop = 'set' AND (eexpire IS NULL OR warc_epoch < eepoch + eexpire), FALSE)
-      END AS _ok
-    FROM (
-      SELECT t.url, t.sid, t.warc_epoch, ev.eop, ev.eexpire, ev.eepoch,
-        row_number() OVER (PARTITION BY t.url, t.sid, bt.name
-                           ORDER BY ev.eepoch DESC NULLS LAST, ev.eurl DESC NULLS LAST,
-                                    ev.esid DESC NULLS LAST) AS _rn,
-        bt.test_op AS _test_op
-      FROM {rel} t
-      JOIN {tv} ON t.sid = bt.sid
-      LEFT JOIN (
-        SELECT bw.name AS ename, {ekey} AS ekey, g.warc_epoch AS eepoch,
-               g.url AS eurl, g.sid AS esid, bw.op AS eop, bw.expire AS eexpire
-        FROM {rel} g JOIN {wv} ON g.sid = bw.sid
-      ) ev ON ev.ename = bt.name AND ev.ekey = {tkey}
-          AND (ev.eepoch < t.warc_epoch
-               OR (ev.eepoch = t.warc_epoch AND ev.eurl <= t.url))
-    ) q WHERE _rn = 1
-  ) GROUP BY url, sid HAVING bool_and(_ok))
+    SELECT (url, sid) FROM ({union}
+    ) GROUP BY url, sid HAVING bool_and(ok))
 """.strip()

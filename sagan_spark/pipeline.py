@@ -13,6 +13,11 @@ Stage order (defines the golden semantics; [U] engine.c hot path):
 
 from __future__ import annotations
 
+import glob
+import os
+from urllib.parse import unquote
+
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -173,31 +178,35 @@ class Pipeline:
 
     def write_sinks(self, pages: DataFrame, out_dir: str) -> dict[str, int]:
         """Fan-out write: one directory per sink, partitioned by
-        signature_id ([U] output.c dispatch → K1-K7).  Returns per-sink
-        row counts.
+        signature_id ([U] output.c dispatch → K1-K7), in the Hive layout
+        ``out_dir/sink=<s>/signature_id=<n>/`` of :func:`write_routed`.
+        Returns per-sink row counts."""
+        counts: dict[str, int] = {}
+        for key, n in write_routed(self.routed(pages), out_dir).items():
+            sink = key.split("/", 1)[0]
+            counts[sink] = counts.get(sink, 0) + n
+        return counts
 
-        Single-pass: ONE ``partitionBy(sink, signature_id)`` write
-        replaces the old per-sink filtered-writes loop (which scanned
-        the routed frame once per sink — at 100× the data the re-scans
-        are the cost).  NOTE this was a LAYOUT MIGRATION, not a
-        byte-identical swap: the loop wrote ``out_dir/<sink>/...`` with
-        ``sink`` as a data column; the partitioned write produces Hive
-        -style ``out_dir/sink=<s>/signature_id=<n>/`` and both ``sink``
-        and ``signature_id`` live only in the partition directories,
-        not in the data files (tests/README reflect the new layout)."""
-        routed = self.routed(pages).persist()
-        try:
-            counts = {
-                r["sink"]: r["cnt"]
-                for r in routed.groupBy("sink")
-                .agg(F.count(F.lit(1)).alias("cnt"))
-                .collect()
-            }
-            (
-                routed.write.mode("overwrite")
-                .partitionBy("sink", "signature_id")
-                .parquet(out_dir)
-            )
-            return counts
-        finally:
-            routed.unpersist()
+
+def write_routed(routed: DataFrame, path: str) -> dict[str, int]:
+    """One write of ``routed`` to the local directory ``path`` in the
+    Hive layout ``sink=<s>/signature_id=<n>/`` (both columns live only
+    in the directory names), rebalanced on the same columns so a group
+    is one file unless AQE splits it for size.  Returns ``{"<sink>/<sid>":
+    rows}`` from the footers of the files just written: the committed
+    rows, with no second Spark job."""
+    (
+        routed.hint("rebalance", "sink", "signature_id")
+        .write.mode("overwrite")
+        .partitionBy("sink", "signature_id")
+        .parquet(path)
+    )
+    counts: dict[str, int] = {}
+    for f in glob.glob(os.path.join(glob.escape(path), "sink=*", "signature_id=*", "*.parquet")):
+        leaf = os.path.dirname(f)
+        # Spark %XX-escapes partition values in directory names
+        key = "/".join(
+            unquote(os.path.basename(d).split("=", 1)[1]) for d in (os.path.dirname(leaf), leaf)
+        )
+        counts[key] = counts.get(key, 0) + pq.read_metadata(f).num_rows
+    return counts

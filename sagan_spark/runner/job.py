@@ -21,6 +21,12 @@ reproduces the global run *bit-for-bit* (tests/test_runner.py) because:
 A ruleset with a no-expiry xbit would make LOOKBACK unbounded — the
 runner detects that and falls back to a single global partition.
 
+A unit runs one write (:func:`sagan_spark.pipeline.write_routed`),
+which returns the per-sink counts from the written files' footers.
+``input_rows`` (pages in ``[t0, t1)``) is an ``Observation`` on the
+unit's pages, filled by the first job that reads them: the gate
+staging write for the fixture ruleset, else the sink write.
+
 Resume: a unit whose manifest exists (and matches the run's lineage
 fingerprint) is skipped.  Manifests record input/routed row counts,
 per-sink counts, wall time, and the lineage (input path, ruleset
@@ -37,13 +43,16 @@ import os
 import subprocess
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from sagan_spark.pages import BASE_EPOCH, SPAN_S
-from sagan_spark.pipeline import Pipeline
+from sagan_spark.pipeline import Pipeline, write_routed
 from sagan_spark.rules.fixture_rules import RULESET, fixture_rules
 from sagan_spark.rules.model import Rule
+
+# units in flight at once: Spark's scheduler runs their jobs side by side
+MAX_PARALLEL_UNITS = 4
 
 
 def lookback_seconds(rules: list[Rule]) -> int | None:
@@ -106,17 +115,11 @@ def run_partitioned(
     out_dir: str,
     partition_hours: int = 6,
     lineage: str = "",
-    max_parallel_units: int = 4,
 ) -> dict:
     """Process event-time units with manifest-based resume.  Returns
-    run summary (units run/skipped, totals).
-
-    Units are submitted through a small thread pool — Spark's scheduler
-    runs the concurrent jobs and keeps the cluster saturated while any
-    one unit sits in a driver round-trip (count/collect/manifest IO);
-    the old serial unit loop left the cluster idle during every
-    round-trip, the per-unit serialism VERDICT r1 flagged.  Results are
-    merged in deterministic bounds order after all futures complete."""
+    run summary (units run/skipped, totals).  Units run in a small
+    thread pool, so Spark stays busy while one unit builds its plan or
+    reads and writes files; results merge in bounds order."""
     from concurrent.futures import ThreadPoolExecutor
 
     rules = list(fixture_rules())
@@ -145,34 +148,19 @@ def run_partitioned(
                 return {"skipped": True, **m["metrics"]}
 
         t_start = time.time()
-        lo = t0 - (lb or 0)
         # partition pruning: at scale this filter prunes Iceberg
         # partitions; on parquet it becomes a pushed-down row filter
+        seen = Observation()
         unit_pages = pages.where(
-            (F.col("warc_epoch") >= lo) & (F.col("warc_epoch") < t1)
-        )
+            (F.col("warc_epoch") >= t0 - (lb or 0)) & (F.col("warc_epoch") < t1)
+        ).observe(seen, F.count_if(F.col("warc_epoch") >= t0).alias("input_rows"))
         routed = pipe.routed(unit_pages).where(
             (F.col("warc_epoch") >= t0) & (F.col("warc_epoch") < t1)
         )
-        routed = routed.persist()
-        try:
-            sink_counts = {
-                f"{r['sink']}/{r['signature_id']}": r["n"]
-                for r in routed.groupBy("sink", "signature_id")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()
-            }
-            (
-                routed.write.mode("overwrite")
-                .partitionBy("sink", "signature_id")
-                .parquet(os.path.join(out_dir, f"part={part_id}"))
-            )
-        finally:
-            routed.unpersist()
-        n_input = unit_pages.where(F.col("warc_epoch") >= t0).count()
+        sink_counts = write_routed(routed, os.path.join(out_dir, f"part={part_id}"))
 
         metrics = {
-            "input_rows": n_input,
+            "input_rows": seen.get["input_rows"],
             "routed_rows": sum(sink_counts.values()),
             "sink_counts": sink_counts,
             "wall_s": round(time.time() - t_start, 3),
@@ -188,7 +176,7 @@ def run_partitioned(
         os.replace(tmp, mpath)  # manifest last + atomic rename = commit point
         return {"skipped": False, **metrics}
 
-    with ThreadPoolExecutor(max_workers=min(max_parallel_units, len(bounds))) as ex:
+    with ThreadPoolExecutor(max_workers=min(MAX_PARALLEL_UNITS, len(bounds))) as ex:
         results = list(ex.map(lambda b: process(*b), bounds))
 
     summary = {"units": len(bounds), "run": 0, "skipped": 0, "routed_rows": 0, "input_rows": 0}

@@ -204,23 +204,17 @@ def xbits_gate_stream(hits: DataFrame, rules) -> DataFrame:
     doesn't have, so they are rejected loudly (batch-only).
 
     A tester row carries ALL of its rule's test specs in ``cmps`` and
-    is emitted iff EVERY spec passes — the streaming twin of the batch
-    ALL-pass aggregates (gates/xbits.py).  Rules mixing count tests
-    with isset/isnotset tests are rejected in BOTH engines (see
-    _reject_mixed_bit_families).  Agreement with the batch join-back is
-    exact under in-order arrival (availableNow drain — pinned by
+    is emitted iff EVERY spec passes, count and isset/isnotset specs
+    alike — the streaming twin of the batch ALL-pass aggregate
+    (gates/xbits.py).  Agreement with the batch join-back is exact
+    under in-order arrival (availableNow drain — pinned by
     tests/test_streaming_gates.py)."""
     from functools import reduce
 
-    from sagan_spark.gates.xbits import (
-        _reject_mixed_bit_families,
-        bit_count_rows,
-        bit_ops_rows,
-    )
+    from sagan_spark.gates.xbits import bit_count_rows, bit_ops_rows
 
     writes, tests = bit_ops_rows(rules)
     counts = bit_count_rows(rules)
-    _reject_mixed_bit_families(tests, counts)
     if not tests and not counts:
         return hits.where(F.lit(False)).select(
             "url", "domain", "warc_epoch", "sid"
@@ -334,24 +328,22 @@ def _limit_fn(count: int, seconds: int):
     tumbling S-second window aligned to the epoch (win = epoch // S —
     identical anchoring and (warc_epoch, url) order as the batch
     row_number in gates/windows.py).  State is O(1): (window id,
-    emitted count)."""
+    emitted count).  A row's rank in its window is its position minus
+    the window's first position in the sorted batch, plus the carried
+    count when the window continues the state's."""
+    import numpy as np
     import pandas as pd
 
     def fn(key, pdf_iter, state):
         win, n = state.get if state.exists else (-1, 0)
         rows = pd.concat(list(pdf_iter), ignore_index=True)
         rows = rows.sort_values(["warc_epoch", "url"], ignore_index=True)
-        keep = []
-        for t in rows["warc_epoch"]:
-            w = int(t) // seconds
-            if w != win:
-                win, n = w, 0
-            ok = n < count
-            if ok:
-                n += 1
-            keep.append(ok)
-        state.update((win, n))
-        yield rows[pd.Series(keep)][["url", "domain", "warc_epoch", "sid"]]
+        w = rows["warc_epoch"].to_numpy(dtype=np.int64) // seconds
+        carried = np.where(w == win, n, 0)
+        k = np.arange(len(w)) - np.searchsorted(w, w, "left") + carried
+        in_last = len(w) - np.searchsorted(w, w[-1], "left")
+        state.update((int(w[-1]), min(count, int(carried[-1]) + in_last)))
+        yield rows[k < count][["url", "domain", "warc_epoch", "sid"]]
 
     return fn
 

@@ -180,7 +180,8 @@ def test_count_gates_run_no_probe(spark, memo_store):
 # Parity rules: setters with no, zero and positive expiry plus an unset
 # on name "c", a second name "d" keyed by source IP, and gt/lt/eq
 # testers (sid 34 carries two tests that must both pass), and isset /
-# isnotset testers on the same names and keys (sid 38 carries both).
+# isnotset testers on the same names and keys (sid 38 carries both, and
+# sid 39 mixes a count test with an isset test).
 _PARITY_RULES = [
     Rule(sid=21, xbits=(XbitOp(op="set", name="c", track="by_domain"),)),
     Rule(sid=22, xbits=(XbitOp(op="set", name="c", track="by_domain", expire=0),)),
@@ -207,6 +208,13 @@ _PARITY_RULES = [
             XbitOp(op="isnotset", name="d", track="by_src"),
         ),
     ),
+    Rule(
+        sid=39,
+        xbits=(
+            XbitOp(op="count", name="c", track="by_domain", cmp="gt", value=2),
+            XbitOp(op="isset", name="c", track="by_domain"),
+        ),
+    ),
 ]
 # columns bit_tests_sql selects beyond COLS; the parity frame leaves them NULL
 _ORACLE_PAD = (
@@ -227,7 +235,7 @@ def _parity_rows(seed: int) -> list[tuple]:
     # one weight per _PARITY_RULES entry: sets that expire after 40 s are
     # the most common and never-expiring sets the rarest, so the hot
     # group's count rises and falls instead of only growing
-    weights = [1, 2, 6, 2, 3, 2, 2, 2, 2, 2, 2, 2, 2]
+    weights = [1, 2, 6, 2, 3, 2, 2, 2, 2, 2, 2, 2, 2, 2]
     pages = [("hot", rng.randrange(600)) for _ in range(1500)]
     pages += [(f"cold{rng.randrange(40)}", rng.randrange(600)) for _ in range(400)]
     rows = []
@@ -259,7 +267,7 @@ def test_bit_tests_match_duckdb_twin(spark, seed):
         want = set(con.execute(sql).fetchall())
     assert got == want
     # not vacuous: every tester rule keeps some rows and drops others
-    for sid in (31, 32, 33, 34, 35, 36, 37, 38):
+    for sid in (31, 32, 33, 34, 35, 36, 37, 38, 39):
         n_in = sum(r[0] == sid for r in rows)
         n_kept = sum(s == sid for _, s in got)
         assert 0 < n_kept < n_in, (sid, n_kept, n_in)

@@ -3,11 +3,14 @@ manifest-based resume (north-rule checkpoint contract)."""
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import subprocess
 import threading
+from urllib.parse import urlparse
 
+import pyarrow.parquet as pq
 import pytest
 
 from sagan_spark.pages import pages_table
@@ -61,6 +64,24 @@ def test_partitioned_equals_global_and_resumes(spark, tmp_path):
     assert m0["lineage"] == "t1"
     assert m0["partition"]["lookback_s"] == 7200
     assert m0["metrics"]["wall_s"] > 0
+
+    # input_rows counts each unit's own pages [t0, t1), look-back excluded,
+    # exactly once: checked against the pages' files read with pyarrow
+    files = [urlparse(f).path for f in pages.inputFiles()]
+    epochs = pq.ParquetDataset(files).read(columns=["warc_epoch"])["warc_epoch"].to_pylist()
+    inputs = []
+    for name in manifests:
+        m = json.load(open(os.path.join(out, "_manifests", name)))
+        t0, t1 = m["partition"]["t0"], m["partition"]["t1"]
+        assert m["metrics"]["input_rows"] == sum(t0 <= e < t1 for e in epochs), name
+        inputs.append(m["metrics"]["input_rows"])
+    assert sum(inputs) == summary["input_rows"] == pages.count()
+
+    # one write per unit, rebalanced by group: one file per leaf directory
+    leaves = glob.glob(os.path.join(out, "part=*", "sink=*", "signature_id=*"))
+    assert leaves
+    for leaf in leaves:
+        assert len(glob.glob(os.path.join(leaf, "*.parquet"))) == 1, leaf
 
     # resume: same lineage → all skipped, same totals
     summary2 = run_partitioned(spark, pages, out, partition_hours=12, lineage="t1")

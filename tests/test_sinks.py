@@ -29,6 +29,10 @@ def test_write_sinks_partitioned(spark, tmp_path):
         # one subdir per distinct signature routed to this sink (the
         # syslog/smtp sinks carry a single rule each)
         assert len(parts) == back.select("signature_id").distinct().count()
+        # rebalanced by (sink, signature_id): one file per leaf
+        for d in parts:
+            leaf = f"{out}/sink={sink}/{d}"
+            assert sum(f.endswith(".parquet") for f in os.listdir(leaf)) == 1, leaf
 
 
 def test_eve_json_parses(spark):

@@ -230,36 +230,90 @@ def test_streaming_bit_tests_differing_tracks_rejected(spark, tmp_path):
             xbits_gate_stream(hits, [r])
 
 
-def test_mixed_bit_families_rejected_everywhere(spark, tmp_path):
-    """A rule mixing count with isset/isnotset tests is rejected in the
-    batch engine, the oracle builder AND the streaming path — the two
-    gate branches would double-emit rows passing both families."""
-    import pytest
+def test_mixed_bit_families_agree_everywhere(spark, tmp_path):
+    """A rule mixing a count test with an isset test on one bit keeps
+    the same (url, sid) set in the batch sweep, the DuckDB twin and the
+    streaming drain (two in-order micro-batches): exactly the rows that
+    pass both families, which differ from the rows either one keeps."""
+    import os
+    import random
+
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
     from sagan_spark.gates.xbits import apply_gates, bit_tests_sql
     from sagan_spark.rules.model import Rule, XbitOp
 
-    r = Rule(
-        sid=98,
-        xbits=(
-            XbitOp(op="count", name="a", track="by_domain", cmp="gt", value=1),
-            XbitOp(op="isset", name="a", track="by_domain"),
-        ),
+    count_a = XbitOp(op="count", name="a", track="by_domain", cmp="gt", value=1)
+    isset_a = XbitOp(op="isset", name="a", track="by_domain")
+    writers = [
+        Rule(sid=51, xbits=(XbitOp(op="set", name="a", track="by_domain", expire=60),)),
+        Rule(sid=52, xbits=(XbitOp(op="unset", name="a", track="by_domain"),)),
+    ]
+    mixed = Rule(sid=53, xbits=(count_a, isset_a))
+
+    rng = random.Random(3)
+    cols = ["sid", "url", "domain", "warc_epoch", "src_ip", "dst_ip", "source"]
+    rows = []
+    for i in range(600):
+        url, domain = f"u{rng.randrange(10**6):06d}-{i}", f"d{rng.randrange(4)}"
+        epoch = rng.randrange(900)
+        for sid in set(rng.choices([51, 52, 53], [4, 1, 3], k=2)):
+            rows.append((sid, url, domain, epoch, "10.0.0.1", "192.168.0.1", "s"))
+    rows.sort(key=lambda r: r[3])
+    schema = ", ".join(
+        f"{c} {'long' if c in ('sid', 'warc_epoch') else 'string'}" for c in cols
     )
-    with pytest.raises(ValueError, match="mixing"):
-        bit_tests_sql([r])
-    df = spark.createDataFrame(
-        [], schema="sid long, url string, domain string, warc_epoch long, "
-        "src_ip string, dst_ip string, source string"
+
+    def kept(df):
+        return {(r["url"], r["sid"]) for r in df.where(F.col("sid") == 53).collect()}
+
+    batch = spark.createDataFrame(rows, schema=schema)
+    got = kept(apply_gates(batch, writers + [mixed]))
+    only_count = kept(apply_gates(batch, writers + [Rule(sid=53, xbits=(count_a,))]))
+    only_isset = kept(apply_gates(batch, writers + [Rule(sid=53, xbits=(isset_a,))]))
+    assert got == only_count & only_isset
+    assert got and only_count - got and only_isset - got
+
+    base = pa.table({c: [r[i] for r in rows] for i, c in enumerate(cols)})
+    pad = ", ".join(
+        f"NULL AS {c}"
+        for c in (
+            "text lang ips port_x port2_x proto_x md5_x sha1_x sha256_x port dst_port "
+            "proto hash classtype country_track country_is country_isnot sink rev "
+            "after_track after_count after_seconds th_type th_track th_count "
+            "th_seconds src_cc dst_cc priority description"
+        ).split()
     )
-    with pytest.raises(ValueError, match="mixing"):
-        apply_gates(df, [r])
-    pages = pages_table(spark, SF_DIR, rep=1)
-    src = str(tmp_path / "pages_src_mixed")
-    pages.coalesce(1).write.mode("overwrite").parquet(src)
-    hits = streaming_hits(read_pages_stream(spark, src))
-    with pytest.raises(ValueError, match="mixing"):
-        xbits_gate_stream(hits, [r])
+    with duckdb.connect() as con:
+        con.register("base", base)
+        con.execute(f"CREATE VIEW wgated AS SELECT *, {pad} FROM base")
+        sql = f"SELECT url, sid FROM ({bit_tests_sql(writers + [mixed])}) WHERE sid = 53"
+        assert set(con.execute(sql).fetchall()) == got
+
+    # two files split by warc_epoch, drained one per micro-batch, so the
+    # second batch's testers read the bit state the first one wrote
+    src = tmp_path / "hits_mixed"
+    src.mkdir()
+    half = next(i for i in range(len(rows) // 2, len(rows)) if rows[i][3] != rows[i - 1][3])
+    for i, part in enumerate((rows[:half], rows[half:])):
+        path = src / f"part-{i}.parquet"
+        pq.write_table(pa.table({c: [r[j] for r in part] for j, c in enumerate(cols)}), path)
+        os.utime(path, (1_000_000 + i, 1_000_000 + i))
+    hits = read_pages_stream(spark, str(src), max_files_per_trigger=1)
+    q = (
+        xbits_gate_stream(hits, writers + [mixed])
+        .writeStream.outputMode("append")
+        .format("memory")
+        .queryName("mixed_2b")
+        .option("checkpointLocation", str(tmp_path / "ckpt_mixed"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    assert sum(p["numInputRows"] > 0 for p in q.recentProgress) == 2
+    assert {(r["url"], r["sid"]) for r in spark.table("mixed_2b").collect()} == got
 
 
 def test_streaming_gates_second_micro_batch_match_batch(spark, tmp_path):
@@ -369,3 +423,46 @@ def test_rolling_kernel_matches_brute_force_over_two_batches():
                 got |= set(zip(out["url"], out["warc_epoch"]))
         assert got == want and 0 < len(want) < len(order), (count, mode)
         assert min(state.get[0]) >= order[-1][0] - seconds
+
+
+def test_limit_kernel_matches_row_loop_over_two_batches():
+    """The vectorized ``limit`` kernel, driven without Spark over two
+    in-order micro-batches split inside one tumbling window, keeps the
+    rows and leaves the state that a per-row loop in (warc_epoch, url)
+    order does."""
+    import random
+
+    import pandas as pd
+
+    from sagan_spark.streaming.gates import _limit_fn
+
+    def row_loop(count, seconds, batches):
+        win, n, kept = -1, 0, set()
+        for b in batches:
+            for u, t in sorted(zip(b["url"], b["warc_epoch"]), key=lambda r: (r[1], r[0])):
+                if t // seconds != win:
+                    win, n = t // seconds, 0
+                if n < count:
+                    n += 1
+                    kept.add((u, t))
+        return kept, (win, n)
+
+    rng = random.Random(11)
+    seconds = 40  # a window holds about 30 rows on average
+    epochs = sorted(rng.randrange(400) for _ in range(300))
+    # cut two rows into the window that holds the middle row
+    mid = epochs[150] // seconds
+    cut = next(i for i, t in enumerate(epochs) if t // seconds == mid) + 2
+    batches = []
+    for part in (epochs[:cut], epochs[cut:]):
+        rows = [(f"u{rng.randrange(10**6):06d}", "d", t, 1) for t in part]
+        rng.shuffle(rows)
+        batches.append(pd.DataFrame(rows, columns=["url", "domain", "warc_epoch", "sid"]))
+    for count in (1, 2, 3, 5, 40):
+        want, want_state = row_loop(count, seconds, batches)
+        fn, state, got = _limit_fn(count, seconds), _StubState(), set()
+        for b in batches:
+            for out in fn(("1", "d"), iter([b.iloc[:100], b.iloc[100:]]), state):
+                got |= set(zip(out["url"], out["warc_epoch"]))
+        assert got == want and 0 < len(want) < len(epochs), count
+        assert tuple(state.get) == want_state, count
