@@ -122,6 +122,8 @@ def run_partitioned(
     reads and writes files; results merge in bounds order."""
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark.util import inheritable_thread_target
+
     rules = list(fixture_rules())
     pipe = Pipeline(spark, rules)
     lb = lookback_seconds(rules)
@@ -176,8 +178,12 @@ def run_partitioned(
         os.replace(tmp, mpath)  # manifest last + atomic rename = commit point
         return {"skipped": False, **metrics}
 
+    # a pool thread does not inherit the caller's job group or other
+    # local properties; wrapping captures them here, on the caller's
+    # thread, once per unit so concurrent units never share one copy
     with ThreadPoolExecutor(max_workers=min(MAX_PARALLEL_UNITS, len(bounds))) as ex:
-        results = list(ex.map(lambda b: process(*b), bounds))
+        futures = [ex.submit(inheritable_thread_target(spark)(process), *b) for b in bounds]
+        results = [f.result() for f in futures]
 
     summary = {"units": len(bounds), "run": 0, "skipped": 0, "routed_rows": 0, "input_rows": 0}
     totals: dict[str, int] = {}

@@ -69,236 +69,168 @@ def _apply(
     )
 
 
-# The r5 (lat, exps) state cannot read a checkpoint written with the
-# pre-r5 bit-state schema.  Discard such checkpoints, or start the query
-# under a new name, before running this version.
-BIT_STATE_SCHEMA = "lat array<string>, exps array<string>"
+# Per tester rule, one slot per bit name it reads (sorted name order):
+# ``until`` folds the latest event into one bound (isset(t) iff
+# t < until) and ``exps`` holds the sorted expiries of unexpired live
+# sets.  A checkpoint written by the earlier version (string state
+# keyed by (bit name, key), one stream source per unioned rule branch)
+# cannot be resumed: on pyspark 4.1.2 the restarted query fails in its
+# first micro-batch, on the source count ("There are [4] sources in
+# the checkpoint offsets and now there are [1]") or, for a one-branch
+# query, with STATE_STORE_KEY_SCHEMA_NOT_COMPATIBLE; it never misreads
+# the old state.  Discard such a checkpoint, or give the query a new
+# name and checkpoint location.
+BIT_STATE_SCHEMA = "until array<long>, exps array<array<long>>"
 
-# sentinel expiry for `set` events with no expire: effectively never
+# ``until`` of a `set` with no expire; ``-_NEVER`` is an unset (or no event)
 _NEVER = 1 << 62
 
-# field separator inside state/spec strings — cannot appear in bit names
-_SEP = "\x1f"
 
-
-def _bit_fn():
-    """Per-group streaming bit store ([U] src/xbit.c latest-bit slot +
+def _bit_fn(specs: dict[int, list[tuple]]):
+    """Streaming bit store ([U] src/xbit.c latest-bit slot +
     src/flexbit.c counter form — the mmap slot becomes group state).
-    One group = one (bit name, key) pair, or one (multi-test rule, key)
-    composite (r5 — multi-name rules previously raised).  State carries
-    BOTH views of the event history PER BIT NAME:
+    One group = one (tester sid, key): its tester rows plus a copy of
+    every writer row of a name the rule reads.  ``specs[sid]`` lists
+    the rule's tests as (name, op, cmp, value); a tester row is emitted
+    iff EVERY test passes — the streaming twin of the batch ALL-pass
+    aggregate.
 
-      * ``lat`` — the LATEST bit event per name
-        ("name␟eepoch␟eop␟eexpire"), for isset/isnotset testers
-        (set + strictly-inside expiry — same boundary as
-        gates/xbits.py);
-      * ``exps`` — the expiry min-multiset of UNEXPIRED ``set`` events
-        per name ("name␟expiry"), for ``count`` testers: counter value
-        at tester time t = number of entries > t (an entry expiring
-        exactly at t is dead, matching the batch sweep's expiry-before-
-        tester ordering; ``unset`` does not decrement — documented
-        counter semantics).
-
-    Tester rows carry ALL of their rule's test specs in ``cmps``
-    ("name␟isset|name␟count␟gt␟2"); the row is emitted iff EVERY spec
-    passes — the streaming twin of the batch min(ok) ALL-pass
-    aggregate.  Rows are processed in the batch sweep's total order
-    (warc_epoch, url, kind, sid): writer rows (kind=0) update the state,
-    tester rows (kind=1) evaluate against it."""
+    Rows are taken in the batch sweep's total order (warc_epoch, url,
+    kind, sid), writers (kind=0) before testers (kind=1).  Per name:
+    the latest writer before a row is a running max over writer
+    positions (falling back to the carried ``until``), so isset is
+    ``t < until`` — the batch boundary (a `set` with expire <= 0 is
+    never live).  The count at tester time t is the live sets before
+    the row minus those expiring at or before t: in-order arrival puts
+    every live set with expiry <= t before the tester, so one
+    ``searchsorted`` over the sorted expiries is exact (an entry
+    expiring exactly at t is dead; ``unset`` does not decrement —
+    documented counter semantics)."""
+    import numpy as np
     import pandas as pd
 
+    compare = {"gt": np.greater, "lt": np.less, "eq": np.equal}
+
     def fn(key, pdf_iter, state):
-        lat: dict[str, tuple[int, str, int | None]] = {}
-        exps: dict[str, list[int]] = {}
+        rule = specs[int(key[0])]
+        names = sorted({nm for nm, *_ in rule})
         if state.exists:
-            lat_raw, exp_raw = state.get
-            for s in lat_raw or []:
-                nm, ep, op, ex = s.split(_SEP)
-                lat[nm] = (int(ep), op, None if ex == "-" else int(ex))
-            for s in exp_raw or []:
-                nm, x = s.split(_SEP)
-                exps.setdefault(nm, []).append(int(x))
+            until, exps = state.get
+        else:
+            until, exps = [-_NEVER] * len(names), [[]] * len(names)
         rows = pd.concat(list(pdf_iter), ignore_index=True)
         rows = rows.sort_values(
             ["warc_epoch", "url", "kind", "sid"], ignore_index=True
         )
-        keep = []
-        for r in rows.itertuples():
-            t = int(r.warc_epoch)
-            if r.kind == 0:
-                nm = r.ename
-                ex = None if pd.isna(r.expire) else int(r.expire)
-                lat[nm] = (t, r.op, ex)
-                keep.append(False)
-                if r.op == "set":
-                    # expire <= 0 can never be counted (dead on arrival)
-                    if ex is None:
-                        exps.setdefault(nm, []).append(_NEVER)
-                    elif ex > 0:
-                        exps.setdefault(nm, []).append(t + ex)
+        t = rows["warc_epoch"].to_numpy(dtype=np.int64)
+        ex = rows["expire"]
+        exp = np.where(ex.isna(), _NEVER, t + ex.fillna(0).to_numpy(dtype=np.int64))
+        is_set = (rows["op"] == "set").to_numpy()
+        row_until = np.where(is_set, exp, -_NEVER)
+        live = is_set & (exp > t)
+        pos = np.arange(len(rows))
+        isset, count, new_until, new_exps = {}, {}, [], []
+        for i, nm in enumerate(names):
+            w = (rows["ename"] == nm).to_numpy()
+            last = np.maximum.accumulate(np.where(w, pos, -1))
+            u = np.where(last < 0, until[i], row_until[last])
+            old = np.asarray(exps[i], dtype=np.int64)
+            xs = np.sort(np.concatenate([old, exp[w & live]]))
+            isset[nm] = t < u
+            count[nm] = np.cumsum(w & live) + len(old) - np.searchsorted(xs, t, "right")
+            new_until.append(int(u[-1]))
+            # entries at or before the last event time are dead for every
+            # later tester (in-order arrival): the state is bounded by the
+            # sets inside the longest expire window
+            new_exps.append(xs[xs > t[-1]].tolist())
+        state.update((new_until, new_exps))
+        ok = (rows["kind"] == 1).to_numpy()
+        for nm, op, cmp_, value in rule:
+            if op == "count":
+                ok &= compare[cmp_](count[nm], value)
             else:
-                ok = True
-                for spec in str(r.cmps).split("|"):
-                    parts = spec.split(_SEP)
-                    nm, op = parts[0], parts[1]
-                    if op == "count":
-                        cur = [x for x in exps.get(nm, []) if x > t]
-                        exps[nm] = cur
-                        n = len(cur)
-                        cmp_, v = parts[2], int(parts[3])
-                        ok = ok and (
-                            n > v if cmp_ == "gt" else n < v if cmp_ == "lt" else n == v
-                        )
-                    else:
-                        le = lat.get(nm)
-                        isset = (
-                            le is not None
-                            and le[1] == "set"
-                            and (le[2] is None or t < le[0] + le[2])
-                        )
-                        ok = ok and (isset if op == "isset" else not isset)
-                keep.append(ok)
-        # entries at-or-before the last processed event time are dead for
-        # every future tester (in-order arrival contract) — pruning here
-        # bounds the state by the sets inside the max expire window
-        t_last = int(rows["warc_epoch"].iloc[-1])
-        state.update(
-            (
-                sorted(
-                    f"{nm}{_SEP}{ep}{_SEP}{op}{_SEP}{'-' if ex is None else ex}"
-                    for nm, (ep, op, ex) in lat.items()
-                ),
-                sorted(
-                    f"{nm}{_SEP}{x}"
-                    for nm, xs in exps.items()
-                    for x in xs
-                    if x > t_last
-                ),
-            )
-        )
-        out = rows[pd.Series(keep)]
-        yield out[["url", "domain", "warc_epoch", "sid"]]
+                ok &= isset[nm] == (op == "isset")
+        yield rows[ok][["url", "domain", "warc_epoch", "sid"]]
 
     return fn
 
 
 def xbits_gate_stream(hits: DataFrame, rules) -> DataFrame:
     """Streaming xbits/flexbits set/unset/isset/isnotset/count
-    (SURVEY §2.6 A4-A5 on the streaming path; r5 closes the last gap —
-    multi-NAME test rules previously raised NotImplementedError).
+    (SURVEY §2.6 A4-A5 on the streaming path).
 
-    Writer- and tester-rule rows are unioned into one keyed stream;
-    ``applyInPandasWithState`` holds the latest bit event AND the
-    unexpired-set expiry multiset per bit name ([U] src/xbit.c,
-    src/flexbit.c counter form).  Grouping:
+    Each tester rule gets its own state group (tester sid, key): its
+    tester rows and a copy of the rows of every writer of a name the
+    rule reads, for ``applyInPandasWithState`` ([U] src/xbit.c,
+    src/flexbit.c counter form).  One join with a broadcast feed table
+    makes the copies, so a writer row rides once per tester rule that
+    reads its name and the stream is still read once.
 
-      * a rule whose bit tests all read ONE name groups by that
-        (name, key) — writers feed the group once;
-      * a rule whose tests span SEVERAL names gets a COMPOSITE group
-        ("\\x00multi:<sid>", key): its tester rows AND a duplicate of
-        every relevant writer's rows ride that group, whose state holds
-        per-name slots.
-
-    Either way ALL of a rule's tests must share one track: tests keyed
-    by differing tracks would need a cross-group join the state store
-    doesn't have, so they are rejected loudly (batch-only).
-
-    A tester row carries ALL of its rule's test specs in ``cmps`` and
-    is emitted iff EVERY spec passes, count and isset/isnotset specs
-    alike — the streaming twin of the batch ALL-pass aggregate
-    (gates/xbits.py).  Agreement with the batch join-back is exact
-    under in-order arrival (availableNow drain — pinned by
-    tests/test_streaming_gates.py)."""
-    from functools import reduce
-
-    from sagan_spark.gates.xbits import bit_count_rows, bit_ops_rows
-
-    writes, tests = bit_ops_rows(rules)
-    counts = bit_count_rows(rules)
-    if not tests and not counts:
-        return hits.where(F.lit(False)).select(
-            "url", "domain", "warc_epoch", "sid"
-        )
-
-    # per-sid test specs: (name, track, spec-string)
-    per_sid: dict[int, list[tuple[str, str, str]]] = {}
-    for sid, name, track, op in tests:
-        per_sid.setdefault(sid, []).append((name, track, f"{name}{_SEP}{op}"))
-    for sid, name, track, cmp_, val in counts:
-        per_sid.setdefault(sid, []).append(
-            (name, track, f"{name}{_SEP}count{_SEP}{cmp_}{_SEP}{val}")
-        )
-
-    def writer_branch(group: str, sid: int, name: str, track: str, op: str, expire):
-        return hits.where(F.col("sid") == sid).select(
-            F.lit(group).alias("bname"),
-            track_key_col(track).alias("bkey"),
-            "warc_epoch",
-            "url",
-            "domain",
-            "sid",
-            F.lit(0).alias("kind"),
-            F.lit(name).alias("ename"),
-            F.lit(op).alias("op"),
-            F.lit(expire).cast("long").alias("expire"),
-            F.lit(None).cast("string").alias("cmps"),
-        )
-
-    def tester_branch(group: str, sid: int, track: str, specs: list[str]):
-        return hits.where(F.col("sid") == sid).select(
-            F.lit(group).alias("bname"),
-            track_key_col(track).alias("bkey"),
-            "warc_epoch",
-            "url",
-            "domain",
-            "sid",
-            F.lit(1).alias("kind"),
-            F.lit(None).cast("string").alias("ename"),
-            F.lit(None).cast("string").alias("op"),
-            F.lit(None).cast("long").alias("expire"),
-            F.lit("|".join(specs)).alias("cmps"),
-        )
-
-    branches = []
-    single_names: set[str] = set()  # names needing plain (name, key) groups
-    composite_names: dict[str, set[str]] = {}  # group id → names it reads
-    for sid, entries in sorted(per_sid.items()):
-        names = {nm for nm, _, _ in entries}
-        tracks = {tr for _, tr, _ in entries}
-        specs = [sp for _, _, sp in entries]
-        if len(tracks) > 1:
-            # one tester row evaluates ALL of its rule's tests against
-            # ONE state group, keyed on one track's value; tests keyed
-            # by different tracks would need a cross-group join the
-            # streaming store doesn't have ([U] flexbit.c)
-            raise NotImplementedError(
-                f"streaming bit tests with DIFFERING tracks "
-                f"(sid {sid}, tracks {sorted(tracks)}) are batch-only"
-            )
-        track = next(iter(tracks))
-        if len(names) == 1:
-            # several specs on one name (e.g. count gt + lt) fold into
-            # one cmps string: ALL must pass
-            nm = next(iter(names))
-            single_names.add(nm)
-            branches.append(tester_branch(nm, sid, track, specs))
-        else:
-            group = f"\x00multi:{sid}"
-            composite_names[group] = names
-            branches.append(tester_branch(group, sid, track, specs))
-
-    for sid, name, track, op, expire in writes:
-        if name in single_names:
-            branches.append(writer_branch(name, sid, name, track, op, expire))
-        for group, names in composite_names.items():
-            if name in names:
-                branches.append(writer_branch(group, sid, name, track, op, expire))
-
-    stream = reduce(lambda a, b: a.unionByName(b), branches)
+    ALL of a rule's tests must share one track: tests keyed by
+    differing tracks would need a cross-group join the state store
+    doesn't have, so they are rejected loudly (batch-only).  Agreement
+    with the batch join-back is exact under in-order arrival
+    (availableNow drain — pinned by tests/test_streaming_gates.py)."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    return stream.groupBy("bname", "bkey").applyInPandasWithState(
-        _bit_fn(),
+    from sagan_spark.gates.xbits import bit_count_rows, bit_ops_rows
+    from sagan_spark.session import local_df
+
+    writes, tests = bit_ops_rows(rules)
+    tests = [(sid, track, (name, op, None, None)) for sid, name, track, op in tests] + [
+        (sid, track, (name, "count", cmp_, val))
+        for sid, name, track, cmp_, val in bit_count_rows(rules)
+    ]
+    if not tests:
+        return hits.where(F.lit(False)).select("url", "domain", "warc_epoch", "sid")
+
+    specs: dict[int, list[tuple]] = {}
+    for sid, _, spec in tests:
+        specs.setdefault(sid, []).append(spec)
+    # (tsid, sid, track, kind, ename, op, expire): which hit sids feed
+    # which tester rule's groups, and as what
+    feeds = []
+    for tsid, rule in sorted(specs.items()):
+        tracks = {tr for sid, tr, _ in tests if sid == tsid}
+        if len(tracks) > 1:
+            # one tester row evaluates ALL of its rule's tests against
+            # ONE state group, keyed on one track's value ([U] flexbit.c)
+            raise NotImplementedError(
+                f"streaming bit tests with DIFFERING tracks "
+                f"(sid {tsid}, tracks {sorted(tracks)}) are batch-only"
+            )
+        names = {nm for nm, *_ in rule}
+        feeds.append((tsid, tsid, tracks.pop(), 1, None, None, None))
+        feeds += [
+            (tsid, sid, track, 0, name, op, expire)
+            for sid, name, track, op, expire in writes
+            if name in names
+        ]
+    feed = local_df(
+        hits.sparkSession,
+        feeds,
+        "tsid long, sid long, track string, kind int, ename string, op string, expire long",
+    )
+    # the key over only the tracks in use: a stream may lack the
+    # columns of the others
+    bkey = F.lit(None).cast("string")
+    for tr in sorted({f[2] for f in feeds}):
+        bkey = F.when(F.col("track") == tr, track_key_col(tr)).otherwise(bkey)
+    # one stream-static join, so the stream is read and matched once
+    keyed = hits.join(F.broadcast(feed), "sid").select(
+        "tsid",
+        bkey.alias("bkey"),
+        "warc_epoch",
+        "url",
+        "domain",
+        "sid",
+        "kind",
+        "ename",
+        "op",
+        "expire",
+    )
+    return keyed.groupBy("tsid", "bkey").applyInPandasWithState(
+        _bit_fn(specs),
         outputStructType=OUT_SCHEMA,
         stateStructType=BIT_STATE_SCHEMA,
         outputMode="append",

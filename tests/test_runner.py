@@ -93,6 +93,24 @@ def test_partitioned_equals_global_and_resumes(spark, tmp_path):
     assert summary3["run"] == 4 and summary3["sink_counts"] == global_counts
 
 
+def test_units_inherit_the_callers_job_group(spark, tmp_path):
+    """Every Spark job a run starts carries the job group its caller
+    set, so the caller can count or cancel a run's jobs by that group."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    pages = pages_table(spark, SF_DIR, rep=1)
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("runner-units", "two runner units")
+    try:
+        summary = run_partitioned(spark, pages, str(tmp_path / "sinks"), partition_hours=24)
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+    assert summary["units"] == 2 and summary["run"] == 2
+    assert tracker.getJobIdsForGroup("runner-units")
+    assert not set(tracker.getJobIdsForGroup(None)) - ungrouped
+
+
 def _global_counts(spark, pages) -> dict[str, int]:
     return {
         f"{r['sink']}/{r['signature_id']}": r["n"]
