@@ -1,40 +1,60 @@
-"""Stateful streaming gates (SURVEY.md §2.6 A1/A3 on the §2.7
-streaming path): ``after`` and ``threshold suppress`` as
-``applyInPandasWithState`` over (sid, gate_key) groups — the streaming
-re-expression of the batch keyed-window aggregates in
-``gates/windows.py`` ([U] upstream holds the same per-key counters in
-mmap; here the rolling-event buffer is Spark-managed state).
+"""Stateful streaming gates (SURVEY.md §2.6 A1-A5 on the §2.7
+streaming path): the window gates (after, threshold limit / suppress /
+threshold) and the xbits/flexbits bit store, each ONE
+``applyInPandasWithState`` operator — the streaming re-expression of
+``gates/windows.py`` and ``gates/xbits.py`` ([U] upstream holds the
+same per-(signature, key) counters in mmap; here group state).
 
-State = the rolling list of event epochs within the last S seconds for
-the group; each micro-batch's rows are processed in (warc_epoch, url)
-order within the group.  Agreement with the batch gates is exact when
-micro-batches arrive in event-time order (the availableNow file-drain
-case, pinned by tests/test_streaming_gates.py); under out-of-order
-arrival the watermarked batch path remains the source of truth —
-SURVEY.md §2.7 note.
+Each micro-batch is sorted in the batch gates' order within a group
+and treated as following every row of the carried state.  Agreement
+with the batch gates is exact when micro-batches arrive in event-time
+order and no (sid, key) epoch tie straddles a micro-batch boundary
+(the availableNow file drain, pinned by tests/test_streaming_gates.py);
+a row behind the state is not detected, and under out-of-order
+arrival the batch path remains the source of truth — SURVEY.md §2.7.
 
-Scale: state per (sid, key) is O(events in S window) — bounded by the
-gate's own window; groups shard across executors by the same
-(sid, key) hash as the batch exchange.
+Scale: state per group is bounded by the gates' own windows; groups
+shard across executors by the same (sid, key) hash as the batch
+exchange.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from sagan_spark.gates.windows import track_key_col
+from sagan_spark.rules.model import AfterGate, Rule
 
 OUT_SCHEMA = "url string, domain string, warc_epoch long, sid long"
-STATE_SCHEMA = "epochs array<long>"
+# the group's carried epochs, sorted
+WINDOW_STATE_SCHEMA = "epochs array<long>"
 
 
-def _rolling_fn(count: int, seconds: int, mode: str):
-    """mode='after': emit once rolling count > N (boundary-inclusive,
-    same as batch rangeBetween(-S, 0)); mode='suppress': emit while
-    rolling count <= N.  In-order arrival makes state + sorted batch
-    one sorted run ``ts``, so a row's count is a prefix difference:
-    one binary search per row, no per-row buffer rebuild."""
+def _key_col(track: Column, tracks) -> Column:
+    """Each row's gate key: a CASE over only the tracks in use, since a
+    stream may lack the columns of the others (``src_ip``)."""
+    key = F.lit(None).cast("string")
+    for tr in sorted(tracks):
+        key = F.when(track == tr, track_key_col(tr)).otherwise(key)
+    return key
+
+
+def _window_fn(specs: dict[int, list[tuple]]):
+    """Every window gate of one (sid, key) group ([U] engine.c after /
+    threshold counters).  ``specs[sid]`` lists the rule's gates as
+    (type, count N, seconds S), type ``after`` or a threshold type; a
+    row is emitted iff EVERY gate passes, each counting every row.
+
+    In-order arrival makes state + sorted batch one sorted run ``ts``,
+    so each gate is a prefix difference over it.  Rolling gates (after
+    > N, suppress <= N, threshold % N == 0) count the epochs in
+    [t - S, t], peers at t included — the batch ``rangeBetween(-S, 0)``
+    frame.  Limit keeps a row whose position after its tumbling
+    window's first epoch (window = epoch // S, (warc_epoch, url) order
+    — the batch row_number) is < N.  The state keeps what a later row
+    can read: the epochs >= t_last - S of each rolling gate and the
+    first N epochs of the last row's limit window."""
     import numpy as np
     import pandas as pd
 
@@ -45,42 +65,87 @@ def _rolling_fn(count: int, seconds: int, mode: str):
         t = rows["warc_epoch"].to_numpy(dtype=np.int64)
         ts = np.concatenate([old, t])
         pos = np.arange(len(old), len(ts))
-        n = pos + 1 - np.searchsorted(ts, t - seconds, "left")
-        state.update(([int(x) for x in ts[ts >= t[-1] - seconds]],))
-        out = rows[n > count if mode == "after" else n <= count]
-        yield out[["url", "domain", "warc_epoch", "sid"]]
+        upto = np.searchsorted(ts, t, "right")
+        ok = np.ones(len(t), dtype=bool)
+        carry = np.zeros(len(ts), dtype=bool)
+        for kind, count, seconds in specs[int(key[0])]:
+            if kind == "limit":
+                first = np.searchsorted(ts, t // seconds * seconds, "left")
+                ok &= pos - first < count
+                carry[first[-1] : first[-1] + count] = True
+                continue
+            n = upto - np.searchsorted(ts, t - seconds, "left")
+            if kind == "after":
+                ok &= n > count
+            else:  # suppress keeps n <= N, threshold every N-th row
+                ok &= n <= count if kind == "suppress" else n % count == 0
+            carry |= ts >= t[-1] - seconds
+        state.update((ts[carry].tolist(),))
+        yield rows[ok][["url", "domain", "warc_epoch", "sid"]]
 
     return fn
 
 
-def _apply(
-    hits: DataFrame, sid: int, track: str, fn, state_schema: str = STATE_SCHEMA
-) -> DataFrame:
+def window_gate_stream(hits: DataFrame, rules) -> DataFrame:
+    """Streaming ``after`` and ``threshold`` (limit, suppress,
+    threshold) for every rule that carries one: one operator grouped
+    by (sid, gate_key), so the stream is read and matched once however
+    many rules are gated.
+
+    A rule's after and threshold gates must share one track: gates
+    keyed by differing tracks would need two state groups per row, so
+    they are rejected loudly (batch-only)."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    keyed = hits.where(F.col("sid") == sid)
-    keyed = keyed.withColumn("gate_key", track_key_col(track))
+    specs: dict[int, list[tuple]] = {}
+    tracks: dict[int, str] = {}
+    for r in rules:
+        gates = [g for g in (r.after, r.threshold) if g]
+        if not gates:
+            continue
+        if len({g.track for g in gates}) > 1:
+            raise NotImplementedError(
+                f"streaming after/threshold with DIFFERING tracks "
+                f"(sid {r.sid}, tracks {sorted(g.track for g in gates)}) are batch-only"
+            )
+        specs[r.sid] = [
+            ("after" if g is r.after else g.ttype, g.count, g.seconds) for g in gates
+        ]
+        tracks[r.sid] = gates[0].track
+    if not specs:
+        return hits.where(F.lit(False)).select("url", "domain", "warc_epoch", "sid")
+    track = F.create_map(*[F.lit(x) for kv in tracks.items() for x in kv])[F.col("sid")]
+    key = _key_col(track, set(tracks.values())).alias("gate_key")
+    keyed = hits.where(F.col("sid").isin(list(specs)))
+    keyed = keyed.select("sid", key, "url", "domain", "warc_epoch")
     return keyed.groupBy("sid", "gate_key").applyInPandasWithState(
-        fn,
+        _window_fn(specs),
         outputStructType=OUT_SCHEMA,
-        stateStructType=state_schema,
+        stateStructType=WINDOW_STATE_SCHEMA,
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
 
-# Per tester rule, one slot per bit name it reads (sorted name order):
-# ``until`` folds the latest event into one bound (isset(t) iff
-# t < until) and ``exps`` holds the sorted expiries of unexpired live
-# sets.  A checkpoint written by the earlier version (string state
-# keyed by (bit name, key), one stream source per unioned rule branch)
-# cannot be resumed: on pyspark 4.1.2 the restarted query fails in its
-# first micro-batch, on the source count ("There are [4] sources in
-# the checkpoint offsets and now there are [1]") or, for a one-branch
-# query, with STATE_STORE_KEY_SCHEMA_NOT_COMPATIBLE; it never misreads
-# the old state.  Discard such a checkpoint, or give the query a new
-# name and checkpoint location.
-BIT_STATE_SCHEMA = "until array<long>, exps array<array<long>>"
+def after_gate_stream(
+    hits: DataFrame, sid: int, track: str, count: int, seconds: int
+) -> DataFrame:
+    """Streaming ``after: track T, count N, seconds S`` for one rule."""
+    return window_gate_stream(
+        hits, [Rule(sid=sid, after=AfterGate(track=track, count=count, seconds=seconds))]
+    )
+
+
+# Per tester rule, one slot per bit name it reads, found by ``names``
+# (after a ruleset edit a name new to the rule starts unset): ``until``
+# folds the latest event into one bound (isset(t) iff t < until) and
+# ``exps`` holds the sorted expiries of unexpired live sets.  A
+# checkpoint of an earlier state layout cannot be resumed: the
+# restarted query fails loudly in its first micro-batch, with
+# STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE (or on the source count),
+# never misreading the old state.  Discard it, or use a new query name
+# and checkpoint location.
+BIT_STATE_SCHEMA = "names array<string>, until array<long>, exps array<array<long>>"
 
 # ``until`` of a `set` with no expire; ``-_NEVER`` is an unset (or no event)
 _NEVER = 1 << 62
@@ -114,10 +179,7 @@ def _bit_fn(specs: dict[int, list[tuple]]):
     def fn(key, pdf_iter, state):
         rule = specs[int(key[0])]
         names = sorted({nm for nm, *_ in rule})
-        if state.exists:
-            until, exps = state.get
-        else:
-            until, exps = [-_NEVER] * len(names), [[]] * len(names)
+        slots = {nm: (u, x) for nm, u, x in zip(*state.get)} if state.exists else {}
         rows = pd.concat(list(pdf_iter), ignore_index=True)
         rows = rows.sort_values(
             ["warc_epoch", "url", "kind", "sid"], ignore_index=True
@@ -130,11 +192,12 @@ def _bit_fn(specs: dict[int, list[tuple]]):
         live = is_set & (exp > t)
         pos = np.arange(len(rows))
         isset, count, new_until, new_exps = {}, {}, [], []
-        for i, nm in enumerate(names):
+        for nm in names:
+            until, exps = slots.get(nm, (-_NEVER, []))
             w = (rows["ename"] == nm).to_numpy()
             last = np.maximum.accumulate(np.where(w, pos, -1))
-            u = np.where(last < 0, until[i], row_until[last])
-            old = np.asarray(exps[i], dtype=np.int64)
+            u = np.where(last < 0, until, row_until[last])
+            old = np.asarray(exps, dtype=np.int64)
             xs = np.sort(np.concatenate([old, exp[w & live]]))
             isset[nm] = t < u
             count[nm] = np.cumsum(w & live) + len(old) - np.searchsorted(xs, t, "right")
@@ -143,7 +206,7 @@ def _bit_fn(specs: dict[int, list[tuple]]):
             # later tester (in-order arrival): the state is bounded by the
             # sets inside the longest expire window
             new_exps.append(xs[xs > t[-1]].tolist())
-        state.update((new_until, new_exps))
+        state.update((names, new_until, new_exps))
         ok = (rows["kind"] == 1).to_numpy()
         for nm, op, cmp_, value in rule:
             if op == "count":
@@ -211,23 +274,10 @@ def xbits_gate_stream(hits: DataFrame, rules) -> DataFrame:
         feeds,
         "tsid long, sid long, track string, kind int, ename string, op string, expire long",
     )
-    # the key over only the tracks in use: a stream may lack the
-    # columns of the others
-    bkey = F.lit(None).cast("string")
-    for tr in sorted({f[2] for f in feeds}):
-        bkey = F.when(F.col("track") == tr, track_key_col(tr)).otherwise(bkey)
+    key = _key_col(F.col("track"), {f[2] for f in feeds}).alias("bkey")
     # one stream-static join, so the stream is read and matched once
     keyed = hits.join(F.broadcast(feed), "sid").select(
-        "tsid",
-        bkey.alias("bkey"),
-        "warc_epoch",
-        "url",
-        "domain",
-        "sid",
-        "kind",
-        "ename",
-        "op",
-        "expire",
+        "tsid", key, "warc_epoch", "url", "domain", "sid", "kind", "ename", "op", "expire"
     )
     return keyed.groupBy("tsid", "bkey").applyInPandasWithState(
         _bit_fn(specs),
@@ -235,56 +285,4 @@ def xbits_gate_stream(hits: DataFrame, rules) -> DataFrame:
         stateStructType=BIT_STATE_SCHEMA,
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def after_gate_stream(
-    hits: DataFrame, sid: int, track: str, count: int, seconds: int
-) -> DataFrame:
-    """Streaming ``after: track T, count N, seconds S`` for one rule."""
-    return _apply(hits, sid, track, _rolling_fn(count, seconds, "after"))
-
-
-def suppress_gate_stream(
-    hits: DataFrame, sid: int, track: str, count: int, seconds: int
-) -> DataFrame:
-    """Streaming ``threshold: type suppress`` for one rule."""
-    return _apply(hits, sid, track, _rolling_fn(count, seconds, "suppress"))
-
-
-LIMIT_STATE_SCHEMA = "win long, n long"
-
-
-def _limit_fn(count: int, seconds: int):
-    """``threshold: type limit``: keep the first N per (sid, key) per
-    tumbling S-second window aligned to the epoch (win = epoch // S —
-    identical anchoring and (warc_epoch, url) order as the batch
-    row_number in gates/windows.py).  State is O(1): (window id,
-    emitted count).  A row's rank in its window is its position minus
-    the window's first position in the sorted batch, plus the carried
-    count when the window continues the state's."""
-    import numpy as np
-    import pandas as pd
-
-    def fn(key, pdf_iter, state):
-        win, n = state.get if state.exists else (-1, 0)
-        rows = pd.concat(list(pdf_iter), ignore_index=True)
-        rows = rows.sort_values(["warc_epoch", "url"], ignore_index=True)
-        w = rows["warc_epoch"].to_numpy(dtype=np.int64) // seconds
-        carried = np.where(w == win, n, 0)
-        k = np.arange(len(w)) - np.searchsorted(w, w, "left") + carried
-        in_last = len(w) - np.searchsorted(w, w[-1], "left")
-        state.update((int(w[-1]), min(count, int(carried[-1]) + in_last)))
-        yield rows[k < count][["url", "domain", "warc_epoch", "sid"]]
-
-    return fn
-
-
-def limit_gate_stream(
-    hits: DataFrame, sid: int, track: str, count: int, seconds: int
-) -> DataFrame:
-    """Streaming ``threshold: type limit`` for one rule (A2 on the
-    streaming path — completes the window-gate trio there)."""
-    return _apply(
-        hits, sid, track, _limit_fn(count, seconds), state_schema=LIMIT_STATE_SCHEMA
     )

@@ -4,12 +4,13 @@ read loop in src/sagan.c).
 
 The SAME compiled ruleset (CompiledRules) drives both the batch and
 streaming plans — matching, extraction and routing are stateless
-projections, so they lift to ``readStream`` unchanged.  Stateful gates
-(after/threshold) map to watermarked windowed aggregations; the batch
-pipeline remains the source of truth for exact semantics (event-time
-total order is not enforceable under late data — the watermark bounds
-it instead), which is why the north rule pins correctness on the batch
-path.
+projections, so they lift to ``readStream`` unchanged.  The stateful
+gates (after/threshold, xbits/flexbits) are one ``applyInPandasWithState``
+operator each in ``streaming/gates.py``, exact under in-order arrival;
+the batch pipeline remains the source of truth for exact semantics
+(event-time total order is not enforceable under late data — the
+watermark bounds it instead), which is why the north rule pins
+correctness on the batch path.
 
 ``streaming_sink_counts`` gives per-sink/per-rule counts over tumbling
 event-time windows with a configurable watermark; fed by a file source

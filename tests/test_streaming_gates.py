@@ -1,10 +1,11 @@
 """Streaming stateful gates agree with the batch gates under an
 in-order availableNow drain (one or two micro-batches): the window
-gates (after / suppress / limit) and the bit store (xbits / flexbits
-set, unset, isset, isnotset, count).  The rolling, limit and bit
-kernels are also driven without Spark against reference loops written
-here, over two micro-batches, and the bit kernel's growth on one hot
-(name, key) is timed."""
+gates (after and the threshold types, one operator for every gated
+rule) and the bit store (xbits / flexbits set, unset, isset, isnotset,
+count), each reading the stream once.  The window and bit kernels are
+also driven without Spark against reference loops written here, over
+two micro-batches; the bit kernel's growth on one hot (name, key) is
+timed, and its state is followed across a ruleset edit."""
 
 from __future__ import annotations
 
@@ -12,12 +13,8 @@ from pyspark.sql import functions as F
 
 from sagan_spark.pages import pages_table
 from sagan_spark.pipeline import Pipeline
-from sagan_spark.streaming.gates import (
-    after_gate_stream,
-    limit_gate_stream,
-    suppress_gate_stream,
-    xbits_gate_stream,
-)
+from sagan_spark.rules.fixture_rules import fixture_rules
+from sagan_spark.streaming.gates import window_gate_stream, xbits_gate_stream
 from sagan_spark.streaming.stream import read_pages_stream, streaming_hits
 
 from .conftest import SF_DIR
@@ -33,7 +30,11 @@ def _drain(spark, gated, tmp_path, name):
         .start()
     )
     q.awaitTermination()
-    return {r["url"] for r in spark.table(name).collect()}
+    return q, {(r["url"], r["sid"]) for r in spark.table(name).collect()}
+
+
+# limit 5000016, after 5000017, suppress 5000018
+WINDOW_SIDS = (5000016, 5000017, 5000018)
 
 
 def test_streaming_after_and_suppress_match_batch(spark, tmp_path):
@@ -44,24 +45,9 @@ def test_streaming_after_and_suppress_match_batch(spark, tmp_path):
     pages.coalesce(1).write.mode("overwrite").parquet(src)
 
     hits = streaming_hits(read_pages_stream(spark, src))
-    got_after = _drain(
-        spark,
-        after_gate_stream(hits, 5000017, "by_domain", 3, 3600),
-        tmp_path,
-        "after_stream",
-    )
-    got_supp = _drain(
-        spark,
-        suppress_gate_stream(hits, 5000018, "by_domain", 5, 3600),
-        tmp_path,
-        "supp_stream",
-    )
-    got_limit = _drain(
-        spark,
-        limit_gate_stream(hits, 5000016, "by_domain", 2, 7200),
-        tmp_path,
-        "limit_stream",
-    )
+    windowed = [r for r in fixture_rules() if r.sid in WINDOW_SIDS]
+    _, got = _drain(spark, window_gate_stream(hits, windowed), tmp_path, "window_stream")
+    got_limit, got_after, got_supp = ({u for u, s in got if s == sid} for sid in WINDOW_SIDS)
 
     pipe = Pipeline(spark)
     batch = pipe.window_gated(spark.read.parquet(src))
@@ -83,8 +69,6 @@ def test_streaming_xbits_match_batch(spark, tmp_path):
     """Streaming bit store agrees with the batch join-back for the
     brute-bit rule family (set 5000019 / isset 5000020 / isnotset
     5000021 / unset 5000022) under an in-order availableNow drain."""
-    from sagan_spark.rules.fixture_rules import fixture_rules
-
     pages = pages_table(spark, SF_DIR, rep=2)
     src = str(tmp_path / "pages_src_xb")
     pages.coalesce(1).write.mode("overwrite").parquet(src)
@@ -119,8 +103,6 @@ def test_streaming_flexbits_count_matches_batch(spark, tmp_path):
     batch running-sum sweep for the fixture's counter rule family
     (sets 5000019 / unsets 5000022 / count tester 5000032) under an
     in-order availableNow drain — r4, closes the VERDICT r3 gap."""
-    from sagan_spark.rules.fixture_rules import fixture_rules
-
     rules = [r for r in fixture_rules() if r.sid in (5000019, 5000022, 5000032)]
     pages = pages_table(spark, SF_DIR, rep=2)
     src = str(tmp_path / "pages_src_cnt")
@@ -236,8 +218,6 @@ def test_streaming_bit_gate_reads_the_stream_once(spark, tmp_path):
     """The bit gate feeds every tester rule's groups from ONE read of
     the stream: a micro-batch's input rows equal the file's rows, not
     one scan (and one match) per tester or writer rule."""
-    from sagan_spark.rules.fixture_rules import fixture_rules
-
     pages = pages_table(spark, SF_DIR, rep=1)
     src = str(tmp_path / "pages_src_once")
     pages.coalesce(1).write.mode("overwrite").parquet(src)
@@ -254,6 +234,37 @@ def test_streaming_bit_gate_reads_the_stream_once(spark, tmp_path):
     q.awaitTermination()
     assert sum(p["numInputRows"] for p in q.recentProgress) == pages.count()
     assert spark.table("xbits_once").count() > 0
+
+
+def test_streaming_window_gates_read_the_stream_once(spark, tmp_path):
+    """The window gate runs every gated rule in ONE stateful operator:
+    a micro-batch's input rows equal the file's rows, not one scan (and
+    one match) per gated rule."""
+    pages = pages_table(spark, SF_DIR, rep=1)
+    src = str(tmp_path / "pages_src_wonce")
+    pages.coalesce(1).write.mode("overwrite").parquet(src)
+    windowed = [r for r in fixture_rules() if r.sid in WINDOW_SIDS]
+    hits = streaming_hits(read_pages_stream(spark, src))
+    q, got = _drain(spark, window_gate_stream(hits, windowed), tmp_path, "window_once")
+    assert sum(p["numInputRows"] for p in q.recentProgress) == pages.count()
+    assert {sid for _, sid in got} == set(WINDOW_SIDS)
+
+
+def test_streaming_window_gate_differing_tracks_rejected(spark):
+    """A rule whose after and threshold gates key by DIFFERENT tracks
+    would need two state groups per row: rejected loudly (batch-only)."""
+    import pytest
+
+    from sagan_spark.rules.model import AfterGate, Rule, ThresholdGate
+
+    rule = Rule(
+        sid=98,
+        after=AfterGate(track="by_domain", count=3, seconds=60),
+        threshold=ThresholdGate(ttype="limit", track="by_src", count=1, seconds=60),
+    )
+    hits = spark.createDataFrame([], "sid long, url string, domain string, warc_epoch long")
+    with pytest.raises(NotImplementedError, match="batch-only"):
+        window_gate_stream(hits, [rule])
 
 
 def test_mixed_bit_families_agree_everywhere(spark, tmp_path):
@@ -346,11 +357,9 @@ def test_streaming_gates_second_micro_batch_match_batch(spark, tmp_path):
     """Group state carried INTO a later micro-batch: two files split by
     warc_epoch (in order) drain with maxFilesPerTrigger=1, so every gate
     reads state written by the first batch.  after / suppress / limit
-    and the brute-bit xbits family must still agree with the batch
-    gates."""
+    (one window query) and the brute-bit xbits family must still agree
+    with the batch gates."""
     import os
-
-    from sagan_spark.rules.fixture_rules import fixture_rules
 
     pages = pages_table(spark, SF_DIR, rep=2)
     (cut,) = pages.approxQuantile("warc_epoch", [0.5], 0.0)
@@ -367,27 +376,17 @@ def test_streaming_gates_second_micro_batch_match_batch(spark, tmp_path):
         os.utime(src / f"part-{i}.parquet", (1_000_000 + i, 1_000_000 + i))
 
     brute = [r for r in fixture_rules() if r.sid in (5000019, 5000020, 5000021, 5000022)]
+    windowed = [r for r in fixture_rules() if r.sid in WINDOW_SIDS]
     hits = streaming_hits(read_pages_stream(spark, str(src), max_files_per_trigger=1))
-    # one stateful operator per query: each gate drains on its own
     streams = {
-        "after_2b": after_gate_stream(hits, 5000017, "by_domain", 3, 3600),
-        "supp_2b": suppress_gate_stream(hits, 5000018, "by_domain", 5, 3600),
-        "limit_2b": limit_gate_stream(hits, 5000016, "by_domain", 2, 7200),
+        "window_2b": window_gate_stream(hits, windowed),
         "xbits_2b": xbits_gate_stream(hits, brute),
     }
     got = set()
     for name, gated in streams.items():
-        q = (
-            gated.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", str(tmp_path / f"ckpt_{name}"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        q, rows = _drain(spark, gated, tmp_path, name)
         assert sum(p["numInputRows"] > 0 for p in q.recentProgress) == 2, name
-        got |= {(r["url"], r["sid"]) for r in spark.table(name).collect()}
+        got |= rows
 
     pipe = Pipeline(spark)
     batch = pipe.gated(spark.read.parquet(str(src)))
@@ -401,7 +400,7 @@ def test_streaming_gates_second_micro_batch_match_batch(spark, tmp_path):
 
 
 class _StubState:
-    """The part of ``GroupState`` the rolling kernel uses."""
+    """The part of ``GroupState`` the kernels use."""
 
     def __init__(self):
         self.exists, self.get = False, None
@@ -410,68 +409,99 @@ class _StubState:
         self.exists, self.get = True, value
 
 
-def test_rolling_kernel_matches_brute_force_over_two_batches():
-    """The rolling after/suppress kernel, driven without Spark over two
-    in-order micro-batches with equal-epoch ties (also across the batch
-    boundary), keeps exactly the rows a brute-force rolling count keeps
-    in (warc_epoch, url) processing order."""
-    import itertools
-    import random
+def _window_reference(batches, gates):
+    """Reference for the window kernel: rows in (warc_epoch, url) order,
+    batch by batch.  A rolling gate counts the rows delivered so far
+    (this batch and every earlier one) in [t - S, t], so peers at t
+    count as in the batch RANGE frame; limit ranks a row among the
+    rows before it in its tumbling window."""
+    kept, delivered, done = set(), [], []
+    for b in batches:
+        rows = sorted(zip(b["warc_epoch"], b["url"]))
+        delivered += [t for t, _ in rows]
+        for t, u in rows:
+            ok = True
+            for kind, count, seconds in gates:
+                if kind == "limit":
+                    ok &= sum(s // seconds == t // seconds for s in done) < count
+                    continue
+                n = sum(t - seconds <= s <= t for s in delivered)
+                if kind == "after":
+                    ok &= n > count
+                else:
+                    ok &= n <= count if kind == "suppress" else n % count == 0
+            done.append(t)
+            if ok:
+                kept.add((u, t))
+    return kept
 
+
+def _run_window_kernel(gates, batches, split):
+    from sagan_spark.streaming.gates import _window_fn
+
+    fn, state, got = _window_fn({1: gates}), _StubState(), set()
+    for b in batches:
+        for out in fn((1, "d"), iter([b.iloc[:split], b.iloc[split:]]), state):
+            got |= set(zip(out["url"], out["warc_epoch"]))
+    return got, state.get[0]
+
+
+def _window_batches(rng, epochs, cut):
     import pandas as pd
 
-    from sagan_spark.streaming.gates import _rolling_fn
-
-    rng = random.Random(7)
-    epochs = sorted(rng.randrange(300) for _ in range(400))
-    # split inside a run of equal epochs, so a tie straddles the batches
-    cut = next(i for i in range(200, 399) if epochs[i] == epochs[i + 1]) + 1
     batches = []
     for part in (epochs[:cut], epochs[cut:]):
         rows = [(f"u{rng.randrange(10**6):06d}", "d", t, 1) for t in part]
         rng.shuffle(rows)
         batches.append(pd.DataFrame(rows, columns=["url", "domain", "warc_epoch", "sid"]))
-    order = [
-        (t, u)
-        for b in batches
-        for u, t in sorted(zip(b["url"], b["warc_epoch"]), key=lambda r: (r[1], r[0]))
-    ]
-    seconds = 10  # a window holds about 13 rows on average
-    for count, mode in itertools.product((4, 9, 13), ("after", "suppress")):
-        want = set()
-        for i, (t, u) in enumerate(order):
-            n = sum(1 for s, _ in order[: i + 1] if s >= t - seconds)
-            if (n > count) if mode == "after" else (n <= count):
-                want.add((u, t))
-        fn, state, got = _rolling_fn(count, seconds, mode), _StubState(), set()
-        for b in batches:
-            for out in fn(("1", "d"), iter([b.iloc[:150], b.iloc[150:]]), state):
-                got |= set(zip(out["url"], out["warc_epoch"]))
-        assert got == want and 0 < len(want) < len(order), (count, mode)
-        assert min(state.get[0]) >= order[-1][0] - seconds
+    return batches
 
 
-def test_limit_kernel_matches_row_loop_over_two_batches():
-    """The vectorized ``limit`` kernel, driven without Spark over two
-    in-order micro-batches split inside one tumbling window, keeps the
-    rows and leaves the state that a per-row loop in (warc_epoch, url)
-    order does."""
+def test_rolling_kernel_matches_brute_force_over_two_batches():
+    """The window kernel's rolling gates (after, suppress, threshold
+    and after combined with each), driven without Spark over two
+    in-order micro-batches with equal-epoch ties (also across the batch
+    boundary), keep exactly the rows the reference keeps: every peer
+    at the same epoch in a batch shares one count and one verdict."""
     import random
 
     import pandas as pd
 
-    from sagan_spark.streaming.gates import _limit_fn
+    six = pd.DataFrame(
+        [(f"u{i}", "d", 100, 1) for i in range(6)], columns=["url", "domain", "warc_epoch", "sid"]
+    )
+    # six peers at one epoch all count 6, as in the batch RANGE frame
+    assert len(_run_window_kernel([("after", 3, 60)], [six], 3)[0]) == 6
+    assert len(_run_window_kernel([("suppress", 5, 60)], [six], 3)[0]) == 0
 
-    def row_loop(count, seconds, batches):
-        win, n, kept = -1, 0, set()
+    rng = random.Random(7)
+    epochs = sorted(rng.randrange(300) for _ in range(400))
+    # split inside a run of equal epochs, so a tie straddles the batches
+    cut = next(i for i in range(200, 399) if epochs[i] == epochs[i + 1]) + 1
+    batches = _window_batches(rng, epochs, cut)
+    # a window of 10 s holds about 13 rows on average
+    specs = [[(kind, count, 10)] for kind in ("after", "suppress") for count in (4, 9, 13)]
+    specs += [[("threshold", 2, 10)], [("threshold", 3, 25)]]
+    specs += [[("after", 4, 10), ("suppress", 20, 30)], [("after", 9, 25), ("threshold", 2, 10)]]
+    for gates in specs:
+        want = _window_reference(batches, gates)
+        got, state = _run_window_kernel(gates, batches, 150)
+        assert got == want and 0 < len(want) < len(epochs), gates
         for b in batches:
-            for u, t in sorted(zip(b["url"], b["warc_epoch"]), key=lambda r: (r[1], r[0])):
-                if t // seconds != win:
-                    win, n = t // seconds, 0
-                if n < count:
-                    n += 1
-                    kept.add((u, t))
-        return kept, (win, n)
+            verdicts = {}
+            for u, t in zip(b["url"], b["warc_epoch"]):
+                verdicts.setdefault(t, set()).add((u, t) in got)
+            assert all(len(v) == 1 for v in verdicts.values()), gates
+        assert min(state) >= epochs[-1] - max(s for _, _, s in gates), gates
+
+
+def test_limit_kernel_matches_row_loop_over_two_batches():
+    """The window kernel's ``limit`` gate, alone and with ``after`` on
+    the same rule, driven without Spark over two in-order micro-batches
+    split inside one tumbling window, keeps the rows the reference
+    keeps, and carries no more than the first N epochs of the last
+    window (plus the after window's epochs)."""
+    import random
 
     rng = random.Random(11)
     seconds = 40  # a window holds about 30 rows on average
@@ -479,19 +509,18 @@ def test_limit_kernel_matches_row_loop_over_two_batches():
     # cut two rows into the window that holds the middle row
     mid = epochs[150] // seconds
     cut = next(i for i, t in enumerate(epochs) if t // seconds == mid) + 2
-    batches = []
-    for part in (epochs[:cut], epochs[cut:]):
-        rows = [(f"u{rng.randrange(10**6):06d}", "d", t, 1) for t in part]
-        rng.shuffle(rows)
-        batches.append(pd.DataFrame(rows, columns=["url", "domain", "warc_epoch", "sid"]))
+    batches = _window_batches(rng, epochs, cut)
+    last = epochs[-1] // seconds * seconds
     for count in (1, 2, 3, 5, 40):
-        want, want_state = row_loop(count, seconds, batches)
-        fn, state, got = _limit_fn(count, seconds), _StubState(), set()
-        for b in batches:
-            for out in fn(("1", "d"), iter([b.iloc[:100], b.iloc[100:]]), state):
-                got |= set(zip(out["url"], out["warc_epoch"]))
-        assert got == want and 0 < len(want) < len(epochs), count
-        assert tuple(state.get) == want_state, count
+        gates = [("limit", count, seconds)]
+        got, state = _run_window_kernel(gates, batches, 100)
+        assert got == _window_reference(batches, gates) and 0 < len(got) < len(epochs)
+        assert state == [t for t in epochs if t >= last][:count], count
+    gates = [("after", 3, 15), ("limit", 5, seconds)]
+    want = _window_reference(batches, gates)
+    got, state = _run_window_kernel(gates, batches, 100)
+    assert got == want and 0 < len(want) < len(epochs)
+    assert min(state) >= min(last, epochs[-1] - 15)
 
 
 def _scan_bit_tests(order, rule):
@@ -602,7 +631,36 @@ def test_bit_kernel_matches_brute_force_over_two_batches():
                 got |= set(zip(out["url"], out["sid"]))
         testers = sum(r["kind"] for r in order)
         assert got == want and 0 < len(want) < testers, tsid
-        assert all(x > order[-1]["warc_epoch"] for xs in state.get[1] for x in xs)
+        assert all(x > order[-1]["warc_epoch"] for xs in state.get[2] for x in xs)
+
+
+def test_bit_kernel_state_follows_names_across_a_rule_edit():
+    """A tester rule edited between micro-batches (a query restarted
+    from its checkpoint with a new ruleset) reads each carried slot by
+    bit name: a name the state never held starts unset, and a carried
+    name keeps its slot whatever names join it."""
+    import pandas as pd
+
+    from sagan_spark.streaming.gates import _bit_fn
+
+    def run(rule, rows, state):
+        cols = ["warc_epoch", "url", "domain", "sid", "kind", "ename", "op", "expire"]
+        # Arrow hands a null long column over as float NaN
+        pdf = pd.DataFrame(rows, columns=cols).astype({"expire": "float64"})
+        (out,) = _bit_fn({2: rule})((2, "d"), iter([pdf]), state)
+        return set(out["url"])
+
+    first = _StubState()
+    writer, tester = (10, "w", "d", 1, 0, "a", "set", None), (11, "t1", "d", 2, 1, None, None, None)
+    assert run([("a", "isset", None, None)], [writer, tester], first) == {"t1"}
+    later = [(20, "t2", "d", 2, 1, None, None, None)]
+    for rule, want in (
+        ([("b", "isset", None, None)], set()),
+        ([("a", "isset", None, None), ("b", "isnotset", None, None)], {"t2"}),
+    ):
+        state = _StubState()
+        state.update(first.get)
+        assert run(rule, later, state) == want, rule
 
 
 def test_bit_kernel_grows_linearly_on_a_hot_key():
