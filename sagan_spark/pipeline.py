@@ -70,10 +70,6 @@ class Pipeline:
         self.refs = local_df(spark, ref_rows, "sid long, refs string") if ref_rows else None
 
     # --- stages -----------------------------------------------------------
-    def matched(self, pages: DataFrame) -> DataFrame:
-        m = self.comp.with_sids(pages).where(F.size("sids") > 0)
-        return with_shared_extracts(m)
-
     def hits(self, pages: DataFrame) -> DataFrame:
         # NO pre-explode filter: `where(size(sids) > 0)` before the
         # explode makes the optimizer inline the whole match expression

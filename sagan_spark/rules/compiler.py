@@ -387,20 +387,12 @@ class CompiledRules:
         ]
         return F.concat(*chunks) if len(chunks) > 1 else chunks[0]
 
-    def hits(self, df: DataFrame) -> DataFrame:
-        """Explode to one row per (page, matching rule): the alert
-        candidate stream ([U] engine.c per-rule fire path)."""
-        out = self.with_sids(df)
-        return out.where(F.size("sids") > 0).withColumn(
-            "sid", F.explode("sids")
-        ).drop("sids")
-
     # ------------------------------------------------------------------
     # DuckDB oracle emission
     # ------------------------------------------------------------------
     def matched_sql(self, pages_rel: str = "pages", text: str = "text") -> str:
-        """UNION ALL of per-rule selections — the oracle twin of
-        :meth:`hits` (order-insensitive)."""
+        """UNION ALL of per-rule selections — the oracle twin of the
+        match → explode in ``Pipeline.hits`` (order-insensitive)."""
         parts = [
             f"SELECT url, domain, warc_epoch, {text}, lang, source, "
             f"CAST({r.sid} AS BIGINT) AS sid FROM {pages_rel} "

@@ -3,7 +3,9 @@ streaming path): the window gates (after, threshold limit / suppress /
 threshold) and the xbits/flexbits bit store, each ONE
 ``applyInPandasWithState`` operator — the streaming re-expression of
 ``gates/windows.py`` and ``gates/xbits.py`` ([U] upstream holds the
-same per-(signature, key) counters in mmap; here group state).
+same per-(signature, key) counters in mmap; here group state).  Both
+read ``streaming_hits``: the batch pipeline's enriched alert rows, so
+they see only alerts that passed every stateless option.
 
 Each micro-batch is sorted in the batch gates' order within a group
 and treated as following every row of the carried state.  Agreement
@@ -20,7 +22,7 @@ exchange.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from sagan_spark.gates.windows import track_key_col
@@ -29,15 +31,6 @@ from sagan_spark.rules.model import AfterGate, Rule
 OUT_SCHEMA = "url string, domain string, warc_epoch long, sid long"
 # the group's carried epochs, sorted
 WINDOW_STATE_SCHEMA = "epochs array<long>"
-
-
-def _key_col(track: Column, tracks) -> Column:
-    """Each row's gate key: a CASE over only the tracks in use, since a
-    stream may lack the columns of the others (``src_ip``)."""
-    key = F.lit(None).cast("string")
-    for tr in sorted(tracks):
-        key = F.when(track == tr, track_key_col(tr)).otherwise(key)
-    return key
 
 
 def _window_fn(specs: dict[int, list[tuple]]):
@@ -115,7 +108,7 @@ def window_gate_stream(hits: DataFrame, rules) -> DataFrame:
     if not specs:
         return hits.where(F.lit(False)).select("url", "domain", "warc_epoch", "sid")
     track = F.create_map(*[F.lit(x) for kv in tracks.items() for x in kv])[F.col("sid")]
-    key = _key_col(track, set(tracks.values())).alias("gate_key")
+    key = track_key_col(track).alias("gate_key")
     keyed = hits.where(F.col("sid").isin(list(specs)))
     keyed = keyed.select("sid", key, "url", "domain", "warc_epoch")
     return keyed.groupBy("sid", "gate_key").applyInPandasWithState(
@@ -231,7 +224,10 @@ def xbits_gate_stream(hits: DataFrame, rules) -> DataFrame:
 
     ALL of a rule's tests must share one track: tests keyed by
     differing tracks would need a cross-group join the state store
-    doesn't have, so they are rejected loudly (batch-only).  Agreement
+    doesn't have, so they are rejected loudly (batch-only).  So is a
+    writer or tester rule that also carries after/threshold: the batch
+    bit gates read that rule's window-gate survivors, and one query
+    holds only one ``applyInPandasWithState``.  Agreement
     with the batch join-back is exact under in-order arrival
     (availableNow drain — pinned by tests/test_streaming_gates.py)."""
     from pyspark.sql.streaming.state import GroupStateTimeout
@@ -239,6 +235,12 @@ def xbits_gate_stream(hits: DataFrame, rules) -> DataFrame:
     from sagan_spark.gates.xbits import bit_count_rows, bit_ops_rows
     from sagan_spark.session import local_df
 
+    windowed = sorted(r.sid for r in rules if r.xbits and (r.after or r.threshold))
+    if windowed:
+        raise NotImplementedError(
+            f"streaming bit rules that also carry after/threshold (sids {windowed}) "
+            f"are batch-only"
+        )
     writes, tests = bit_ops_rows(rules)
     tests = [(sid, track, (name, op, None, None)) for sid, name, track, op in tests] + [
         (sid, track, (name, "count", cmp_, val))
@@ -274,7 +276,7 @@ def xbits_gate_stream(hits: DataFrame, rules) -> DataFrame:
         feeds,
         "tsid long, sid long, track string, kind int, ename string, op string, expire long",
     )
-    key = _key_col(F.col("track"), {f[2] for f in feeds}).alias("bkey")
+    key = track_key_col(F.col("track")).alias("bkey")
     # one stream-static join, so the stream is read and matched once
     keyed = hits.join(F.broadcast(feed), "sid").select(
         "tsid", key, "warc_epoch", "url", "domain", "sid", "kind", "ename", "op", "expire"

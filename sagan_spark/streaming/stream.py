@@ -1,16 +1,19 @@
-"""Structured Streaming variant of the match→route stage (SURVEY.md
-§2.7 streaming row; [U] upstream Sagan is a streaming engine — FIFO
-read loop in src/sagan.c).
+"""Structured Streaming variant of the pipeline (SURVEY.md §2.7
+streaming row; [U] upstream Sagan is a streaming engine — FIFO read
+loop in src/sagan.c).
 
-The SAME compiled ruleset (CompiledRules) drives both the batch and
-streaming plans — matching, extraction and routing are stateless
-projections, so they lift to ``readStream`` unchanged.  The stateful
-gates (after/threshold, xbits/flexbits) are one ``applyInPandasWithState``
-operator each in ``streaming/gates.py``, exact under in-order arrival;
-the batch pipeline remains the source of truth for exact semantics
-(event-time total order is not enforceable under late data — the
-watermark bounds it instead), which is why the north rule pins
-correctness on the batch path.
+ONE stateless prefix serves batch and streaming: ``streaming_hits`` is
+the batch ``Pipeline``'s own match → shared extracts → explode → rule
+extraction → GeoIP/classification → country gate chain, pruned to the
+gate columns.  Every stage is a projection or a broadcast stream-static
+join, so the same plan runs on ``readStream`` and the stateful gates
+see only alerts that passed every stateless option, as in Sagan.  The
+stateful gates (after/threshold, xbits/flexbits) are one
+``applyInPandasWithState`` operator each in ``streaming/gates.py``,
+exact under in-order arrival; the batch pipeline remains the source of
+truth for exact semantics (event-time total order is not enforceable
+under late data — the watermark bounds it instead), which is why the
+north rule pins correctness on the batch path.
 
 ``streaming_sink_counts`` gives per-sink/per-rule counts over tumbling
 event-time windows with a configurable watermark; fed by a file source
@@ -24,9 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from sagan_spark.parse.extract import with_shared_extracts
-from sagan_spark.rules.compiler import CompiledRules
-from sagan_spark.rules.fixture_rules import fixture_rules
+from sagan_spark.pipeline import Pipeline
 from sagan_spark.rules.model import Rule
 
 
@@ -41,20 +42,11 @@ def read_pages_stream(
 
 
 def streaming_hits(pages_stream: DataFrame, rules: list[Rule] | None = None) -> DataFrame:
-    """Stateless slice of the pipeline on a stream: match + explode +
-    shared extracts (pure projections — identical plan to batch)."""
-    rules = list(rules) if rules is not None else list(fixture_rules())
-    comp = CompiledRules(rules)
-    m = comp.with_sids(pages_stream).where(F.size("sids") > 0)
-    m = with_shared_extracts(m)
-    sink_map = {r.sid: r.sink for r in rules}
-    sink_col = F.create_map(
-        *[F.lit(x) for kv in sink_map.items() for x in kv]
-    )
-    return (
-        m.withColumn("sid", F.explode("sids"))
-        .drop("sids")
-        .withColumn("sink", sink_col[F.col("sid")])
+    """The alert rows the gates read, on a stream: the batch
+    ``Pipeline``'s enriched, country-gated rows (one plan for both
+    modes)."""
+    return Pipeline(pages_stream.sparkSession, rules).enriched(pages_stream).select(
+        *Pipeline.GATE_COLS
     )
 
 
@@ -66,7 +58,8 @@ def streaming_sink_counts(
     """Watermarked tumbling-window per-sink counts ([U] analog:
     processors/stats-json periodic counters)."""
     return (
-        hits.withWatermark("warc_ts", watermark)
+        hits.withColumn("warc_ts", F.timestamp_seconds("warc_epoch"))
+        .withWatermark("warc_ts", watermark)
         .groupBy(F.window("warc_ts", window).alias("win"), "sink", "sid")
         .agg(F.count(F.lit(1)).alias("n"))
         .select(

@@ -9,8 +9,9 @@ just claimed in docstrings.
     broadcast HASH join (the geo range join carries an equality
     conjunct precisely so it hash-joins);
   * the only Python crossings are the gated Arrow regex batches
-    (ArrowEvalPython), never row-at-a-time BatchEvalPython, and never a
-    hidden one: no plan reads a Python-list dimension as a PythonRDD
+    (ONE ArrowEvalPython in the batch and streaming match plans, so a
+    page crosses into Python once), never row-at-a-time BatchEvalPython,
+    and never a hidden one: no plan reads a Python-list dimension as a PythonRDD
     (``LogicalRDD`` / ``Scan ExistingRDD``), which would re-run Python
     worker tasks on every action — every dimension broadcast builds from
     a ``LocalTableScan``.
@@ -57,6 +58,19 @@ def _assert_no_python_rdd_leaf(df, what: str) -> None:
     assert dims, f"{what}: no dimension broadcast"
     for t in dims:
         assert "LocalTableScan" in t, f"{what}: dimension not a local relation:\n{t}"
+
+
+def _node_names(plan) -> list[str]:
+    """Every node name of a physical plan, looking through the AQE
+    wrapper (whose string form also prints the initial plan) and its
+    query stages."""
+    name = plan.nodeName()
+    if name == "AdaptiveSparkPlan":
+        return _node_names(plan.executedPlan())
+    if name.endswith("QueryStage"):
+        return _node_names(plan.plan())
+    kids = plan.children()
+    return [name] + [n for i in range(kids.size()) for n in _node_names(kids.apply(i))]
 
 
 def test_match_scan_prunes_html(spark):
@@ -108,3 +122,27 @@ def test_python_crossings_are_arrow_only(spark):
     assert "BatchEvalPython" not in _plan(pipe.sink_counts(pages))
     _assert_no_python_rdd_leaf(pipe.enriched(pages), "enriched")
     _assert_no_python_rdd_leaf(pipe.sink_counts(pages), "sink_counts")
+
+
+def test_match_crosses_into_python_once(spark, tmp_path):
+    """One ArrowEvalPython per match plan, batch and streaming: a
+    filter on the match result ahead of the explode would inline the
+    regex UDF twice, and every page would cross into Python twice."""
+    from sagan_spark.streaming.stream import read_pages_stream, streaming_hits
+
+    pages = pages_table(spark, SF_DIR, rep=1)
+    batch = _node_names(Pipeline(spark).hits(pages)._jdf.queryExecution().executedPlan())
+    assert batch.count("ArrowEvalPython") == 1, batch
+    src = str(tmp_path / "pages_src")
+    pages.coalesce(1).write.mode("overwrite").parquet(src)
+    q = (
+        streaming_hits(read_pages_stream(spark, src))
+        .writeStream.format("memory")
+        .queryName("plan_health_stream")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    stream = _node_names(q._jsq.streamingQuery().lastExecution().executedPlan())
+    assert stream.count("ArrowEvalPython") == 1, stream

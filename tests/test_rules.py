@@ -5,6 +5,7 @@ from __future__ import annotations
 import pandas as pd
 
 from sagan_spark.pages import pages_table, pages_with
+from sagan_spark.pipeline import Pipeline
 from sagan_spark.rules.compiler import CompiledRules
 from sagan_spark.rules.fixture_rules import fixture_rules
 from sagan_spark.rules.parser import parse_rule, parse_rules
@@ -114,7 +115,7 @@ def test_match_parity_spark_vs_duckdb(spark, duck):
     comp = CompiledRules(list(fixture_rules()))
     pages = pages_table(spark, SF_DIR, rep=4)
     got = (
-        comp.hits(pages)
+        Pipeline(spark).hits(pages)
         .select("url", "sid")
         .toPandas()
         .sort_values(["url", "sid"])

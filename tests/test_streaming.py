@@ -1,14 +1,13 @@
 """Streaming path: availableNow drain of the pages backlog produces
-the same per-sink match counts as the batch plan (the ruleset compiles
-once, runs in both modes)."""
+the same per-sink alert counts as the batch plan's enriched,
+country-gated alert rows (one stateless prefix, run in both modes)."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from sagan_spark.pages import pages_table
-from sagan_spark.rules.compiler import CompiledRules
-from sagan_spark.rules.fixture_rules import fixture_rules
+from sagan_spark.pipeline import Pipeline
 from sagan_spark.streaming.stream import run_available_now
 
 from .conftest import SF_DIR
@@ -28,14 +27,12 @@ def test_stream_counts_match_batch(spark, tmp_path):
     )
     got = {(r["sink"], r["sid"]): r["n"] for r in streamed}
 
-    rules = list(fixture_rules())
-    comp = CompiledRules(rules)
-    sink_of = {r.sid: r.sink for r in rules}
     batch = (
-        comp.hits(spark.read.parquet(src))
-        .groupBy("sid")
+        Pipeline(spark)
+        .enriched(spark.read.parquet(src))
+        .groupBy("sink", "sid")
         .agg(F.count(F.lit(1)).alias("n"))
         .collect()
     )
-    exp = {(sink_of[r["sid"]], r["sid"]): r["n"] for r in batch}
+    exp = {(r["sink"], r["sid"]): r["n"] for r in batch}
     assert got == exp and len(exp) > 0

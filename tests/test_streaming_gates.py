@@ -2,10 +2,12 @@
 in-order availableNow drain (one or two micro-batches): the window
 gates (after and the threshold types, one operator for every gated
 rule) and the bit store (xbits / flexbits set, unset, isset, isnotset,
-count), each reading the stream once.  The window and bit kernels are
-also driven without Spark against reference loops written here, over
-two micro-batches; the bit kernel's growth on one hot (name, key) is
-timed, and its state is followed across a ruleset edit."""
+count), each reading the stream once, and both reading the batch
+pipeline's enriched, country-gated alert rows.  The window and bit
+kernels are also driven without Spark against reference loops written
+here, over two micro-batches; the bit kernel's growth on one hot
+(name, key) is timed, and its state is followed across a ruleset
+edit."""
 
 from __future__ import annotations
 
@@ -66,35 +68,54 @@ def test_streaming_after_and_suppress_match_batch(spark, tmp_path):
 
 
 def test_streaming_xbits_match_batch(spark, tmp_path):
-    """Streaming bit store agrees with the batch join-back for the
-    brute-bit rule family (set 5000019 / isset 5000020 / isnotset
-    5000021 / unset 5000022) under an in-order availableNow drain."""
+    """Streaming bit store agrees with the batch join-back for every
+    bit family of the fixture ruleset (isset 5000020, isnotset 5000021,
+    ip_pair isset 5000024, count 5000032, and their writers) under an
+    in-order availableNow drain: the stream carries the enriched
+    columns every track keys on."""
     pages = pages_table(spark, SF_DIR, rep=2)
     src = str(tmp_path / "pages_src_xb")
     pages.coalesce(1).write.mode("overwrite").parquet(src)
 
-    brute = [r for r in fixture_rules() if r.sid in (5000019, 5000020, 5000021, 5000022)]
     hits = streaming_hits(read_pages_stream(spark, src))
-    gated = xbits_gate_stream(hits, brute)
-    q = (
-        gated.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("xbits_stream")
-        .option("checkpointLocation", str(tmp_path / "ckpt_xb"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = {(r["url"], r["sid"]) for r in spark.table("xbits_stream").collect()}
+    _, got = _drain(spark, xbits_gate_stream(hits, fixture_rules()), tmp_path, "xbits_stream")
 
-    pipe = Pipeline(spark)
-    batch = pipe.gated(spark.read.parquet(src))
+    testers = [5000020, 5000021, 5000024, 5000032]
+    batch = Pipeline(spark).gated(spark.read.parquet(src))
     exp = {
         (r["url"], r["sid"])
-        for r in batch.where(F.col("sid").isin([5000020, 5000021]))
-        .select("url", "sid")
-        .collect()
+        for r in batch.where(F.col("sid").isin(testers)).select("url", "sid").collect()
     }
+    assert got == exp
+    assert {sid for _, sid in exp} == set(testers)
+
+
+# after-gated rule behind a country gate: only alerts whose src country
+# passes may count toward (and be emitted by) the after gate
+COUNTRY_AFTER_RULE = r"""
+alert syslog any any -> any any (msg:"scan from DE/FR"; \
+  content:"scan"; parse_src_ip: 1; parse_dst_ip: 2; \
+  country_code: track by_src, is DE FR; \
+  after: track by_domain, count 1, seconds 3600; \
+  classtype:geo-anomaly; sink:"alert"; sid:6000010;)
+"""
+
+
+def test_streaming_country_gated_after_matches_batch(spark, tmp_path):
+    """The streaming after gate reads the batch pipeline's country-gated
+    alerts: a rule whose country_code drops most of its matches keeps
+    the same (url, sid) set in one availableNow drain as in batch."""
+    from sagan_spark.rules.parser import parse_rules
+
+    rules = parse_rules(COUNTRY_AFTER_RULE)
+    pages = pages_table(spark, SF_DIR, rep=2)
+    src = str(tmp_path / "pages_src_cc")
+    pages.coalesce(1).write.mode("overwrite").parquet(src)
+
+    hits = streaming_hits(read_pages_stream(spark, src), rules)
+    _, got = _drain(spark, window_gate_stream(hits, rules), tmp_path, "country_after")
+    batch = Pipeline(spark, rules).window_gated(spark.read.parquet(src))
+    exp = {(r["url"], r["sid"]) for r in batch.select("url", "sid").collect()}
     assert got == exp and len(exp) > 0
 
 
@@ -265,6 +286,29 @@ def test_streaming_window_gate_differing_tracks_rejected(spark):
     hits = spark.createDataFrame([], "sid long, url string, domain string, warc_epoch long")
     with pytest.raises(NotImplementedError, match="batch-only"):
         window_gate_stream(hits, [rule])
+
+
+def test_streaming_bit_rule_with_window_gate_rejected(spark):
+    """A bit writer or tester that also carries after/threshold reads
+    its window-gate survivors in batch; the stream cannot chain two
+    stateful operators in one query, so it is rejected loudly."""
+    import pytest
+
+    from sagan_spark.rules.model import AfterGate, Rule, ThresholdGate, XbitOp
+
+    set_a = XbitOp(op="set", name="a", track="by_domain")
+    isset_a = XbitOp(op="isset", name="a", track="by_domain")
+    after = AfterGate(track="by_domain", count=3, seconds=60)
+    limit = ThresholdGate(ttype="limit", track="by_domain", count=1, seconds=60)
+    hits = spark.createDataFrame([], "sid long, url string, domain string, warc_epoch long")
+    # a gated writer, then a gated tester
+    for w_after, t_limit in ((after, None), (None, limit)):
+        rules = [
+            Rule(sid=1, xbits=(set_a,), after=w_after),
+            Rule(sid=2, xbits=(isset_a,), threshold=t_limit),
+        ]
+        with pytest.raises(NotImplementedError, match="batch-only"):
+            xbits_gate_stream(hits, rules)
 
 
 def test_mixed_bit_families_agree_everywhere(spark, tmp_path):
