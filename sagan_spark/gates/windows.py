@@ -17,10 +17,14 @@ Semantics (ours, fixture-defining — upstream ships no tests):
 
 Scale notes: one Window pass per *distinct* S value, all partitioned by
 (sid, key) — Catalyst reuses a single exchange for same-partitioning
-specs, so rule count does not multiply shuffles.  Total order for
-row_number is (warc_epoch, url): (url, sid) rows are unique, so ties
-are impossible.  Hot keys (Zipf domains) are bounded per (sid, key,
-window) and AQE handles residual skew.
+specs, so rule count does not multiply shuffles.  The windows read
+narrow rows of window-gated sids only (keys, clock, gate config; the
+caller, gates/xbits.py ``apply_gates``, projects them off its one
+staged snapshot and joins its decided (url, sid) keys back once), so
+ungated rows never enter the exchange and no alert payload rides the
+sorts.  Total order for row_number is (warc_epoch, url): (url, sid)
+rows are unique, so ties are impossible.  Hot keys (Zipf domains) are
+bounded per (sid, key, window) and AQE handles residual skew.
 """
 
 from __future__ import annotations
@@ -81,7 +85,7 @@ def cleanup_staged() -> None:
 atexit.register(cleanup_staged)
 
 
-def stage_frame(df: DataFrame, name: str = "stage") -> DataFrame:
+def stage_frame(df: DataFrame) -> DataFrame:
     """Materialize a frame once as a staged parquet snapshot and return a
     scan over it (the cluster-scale shape: an Iceberg staging table).
     One parallel write, then plain splittable scans for every downstream
@@ -90,7 +94,7 @@ def stage_frame(df: DataFrame, name: str = "stage") -> DataFrame:
     and the cached blocks promoted to old gen, driving 30s+ ParallelGC
     full collections on later runs.)
     """
-    path = os.path.join(_stage_base(), f"{name}-{uuid.uuid4().hex}")
+    path = os.path.join(_stage_base(), f"stage-{uuid.uuid4().hex}")
     df.write.mode("overwrite").parquet(path)
     return df.sparkSession.read.parquet(path)
 
@@ -170,43 +174,15 @@ def with_gate_keys(df: DataFrame, rules: list[Rule]) -> DataFrame:
     return df.withColumn("th_key", track_key_col(F.col("th_track")))
 
 
-def split_window_gates(
-    df: DataFrame, rules: list[Rule]
-) -> tuple[DataFrame, DataFrame]:
-    """df = the staged :func:`with_gate_keys` stream.  Returns
-    ``(win, rest)``: ``win`` = rows of window-gated rules surviving
-    their after/threshold gates, ``rest`` = rows of every other rule,
-    passed through untouched.  One Window spec per distinct S, shared
-    (sid, key) partitioning.  Stages nothing: the caller
-    (gates/xbits.py ``apply_gates``) owns the barrier.
-
-    Shuffle-volume discipline: windows partition by sid, so rows of
-    ungated rules can never influence a gated rule's counts — they skip
-    the exchange entirely (measured ~22/25 of the alert stream)."""
-    gated_sids = [r.sid for r in rules if r.after or r.threshold]
-    rest = df.where(~F.col("sid").isin(gated_sids))
-    df = df.where(F.col("sid").isin(gated_sids))
-    # NARROW window rows (r4 session 2, same shape as the bit sweeps):
-    # the keep-flag computation needs only the keys, the clock and the
-    # gate config — riding the full alert row through the (sid, key)
-    # exchange + RANGE sorts pays width for nothing, and the hot Zipf
-    # (sid, domain) groups sort in ONE task whose CPU is width × rows.
-    # Survivors LEFT SEMI join back to the staged scan on (url, sid) —
-    # unique per alert row, uniformly distributed, skew-free.
-    wide = df
-    df = df.select(
-        "sid",
-        "url",
-        "warc_epoch",
-        "after_key",
-        "th_key",
-        "after_seconds",
-        "after_count",
-        "th_type",
-        "th_seconds",
-        "th_count",
-    )
-
+def window_survivors(narrow: DataFrame, rules: list[Rule]) -> DataFrame:
+    """The rows of ``narrow`` that survive their rule's after/threshold
+    gates.  ``narrow`` = window-gated rows of the staged
+    :func:`with_gate_keys` stream, projected to their keys, clock and
+    gate config (gates/xbits.py ``apply_gates`` owns the barrier, the
+    projection and the one join-back).  One Window spec per distinct S,
+    shared (sid, key) partitioning; the hot Zipf (sid, domain) groups
+    sort in ONE task whose CPU is width × rows, so the rows stay narrow.
+    """
     after_secs = sorted({r.after.seconds for r in rules if r.after})
     keep = F.lit(True)
     for s in after_secs:
@@ -257,10 +233,7 @@ def split_window_gates(
         ).otherwise(F.lit(True))
 
     # window functions can't live in a WHERE clause — project then filter
-    passed_keys = (
-        df.withColumn("_keep", keep).where(F.col("_keep")).select("url", "sid")
-    )
-    return wide.join(passed_keys, ["url", "sid"], "leftsemi"), rest
+    return narrow.withColumn("_keep", keep).where(F.col("_keep")).drop("_keep")
 
 
 def window_gates_sql(rules: list[Rule], rel: str = "enriched") -> str:

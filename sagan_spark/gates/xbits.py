@@ -11,6 +11,11 @@ tester is strictly inside its expiry window (``t < set.epoch +
 expire`` — a tester exactly at the boundary sees the bit cleared,
 FIXTURES.md F4); see :func:`_apply_bit_tests`.
 
+:func:`apply_gates` is the whole batch gate stage: one staged snapshot,
+one decision pass over its narrow rows (window survivors, then the bit
+sweep over those same survivors), and one LEFT SEMI join-back of the
+decided ``(url, sid)`` keys.
+
 Scale: at 10^12 rows the bit-event table is partition-pruned by the
 same warc_ts partitioning as the pages table (events can only affect
 testers within max-expire of their partition, so per-partition
@@ -25,10 +30,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from sagan_spark.gates.windows import (
-    split_window_gates,
     stage_frame,
     track_key_col,
     track_key_sql,
+    window_survivors,
     with_gate_keys,
 )
 from sagan_spark.rules.model import Rule
@@ -75,62 +80,57 @@ def apply_gates(df: DataFrame, rules: list[Rule]) -> DataFrame:
     gate pass through untouched; every output row carries the gate
     config and key columns of :func:`with_gate_keys`.
 
-    ONE staging barrier: the keyed alert stream is staged once when
-    some rule has a window gate or a bit test.  Every branch (window-
-    gated rows, pass-through rows, bit events, bit testers) then
-    sources its sid subset from that snapshot instead of recomputing
-    the upstream match plan.  All isset / isnotset / count testers go
-    through ONE sweep (:func:`_apply_bit_tests`).  The window
-    computation re-runs only inside branches whose sids are themselves
-    window-gated: when those sids and the bit-op sids are disjoint (the
-    common ruleset shape, and the fixture's), the windows run exactly
-    once; when they overlap, the (small) window-gated subset is staged
-    too so each overlapping branch reads a scan instead of re-sorting."""
+    One barrier, one decision pass, one join-back: the keyed alert
+    stream is staged once when some rule has a window gate or a bit
+    test, whatever the ruleset.  The decision runs on NARROW rows
+    projected off that snapshot (keys, clock, gate config): window
+    survivors of window-gated sids, and the bit sweep
+    (:func:`_apply_bit_tests`) over testers and bit events taken from
+    those same survivors, so a bit rule that also carries a window gate
+    takes the same path as any other.  The decided ``(url, sid)`` keys
+    (unique per alert row, skew-free) then LEFT SEMI join back to the
+    staged rows of decided sids once; other rows pass through."""
     writes, tests = bit_ops_rows(rules)
     counts = bit_count_rows(rules)
     win_sids = {r.sid for r in rules if r.after or r.threshold}
-    df = with_gate_keys(df, rules)
-    if not (win_sids or tests or counts):
-        return df
-    df = stage_frame(df, "gates")
-    win, rest = split_window_gates(df, rules) if win_sids else (None, df)
-    if not (tests or counts):
-        return rest if win is None else win.unionByName(rest)
-    writer_sids = {w[0] for w in writes}
     test_sids = {t[0] for t in tests} | {c[0] for c in counts}
-    if win_sids & (writer_sids | test_sids):
-        # ≥2 branches would re-run the window sort — stage the (small)
-        # window-gated subset once instead
-        win = stage_frame(win, "wingate")
-
-    def source(sids, exclude: bool = False) -> DataFrame:
-        sids = list(sids)
-        if exclude:
-            parts = [
-                f.where(~F.col("sid").isin(sids))
-                for f in (win, rest)
-                if f is not None
-            ]
-        else:
-            parts = []
-            in_win = sorted(set(sids) & win_sids)
-            in_rest = sorted(set(sids) - win_sids)
-            if in_win:
-                parts.append(win.where(F.col("sid").isin(in_win)))
-            if in_rest:
-                parts.append(rest.where(F.col("sid").isin(in_rest)))
-            if not parts:
-                parts = [rest.where(F.lit(False))]
-        return reduce(DataFrame.unionByName, parts)
-
-    spark = df.sparkSession
-    writes_df = local_df(
-        spark, writes, "sid long, name string, track string, op string, expire int"
+    df = with_gate_keys(df, rules)
+    if not (win_sids or test_sids):
+        return df
+    staged = stage_frame(df)
+    narrow = staged.select(
+        "sid", "url", "warc_epoch", "domain", "src_ip", "dst_ip", "source",
+        "after_key", "th_key", "after_seconds", "after_count",
+        "th_type", "th_seconds", "th_count",
     )
-    return source(test_sids, exclude=True).unionByName(
-        _apply_bit_tests(
-            source(test_sids), source(writer_sids), tests, counts, writes_df, spark
+
+    def alerts(sids: set) -> DataFrame:
+        """Narrow window survivors among ``sids``: only window-gated
+        sids enter the window exchange, and no branch plans an empty
+        window."""
+        gated, ungated = sorted(sids & win_sids), sorted(sids - win_sids)
+        parts = [narrow.where(F.col("sid").isin(ungated))] if ungated else []
+        if gated:
+            parts.append(window_survivors(narrow.where(F.col("sid").isin(gated)), rules))
+        return reduce(DataFrame.unionByName, parts or [narrow.where(F.lit(False))])
+
+    only_win = win_sids - test_sids
+    keys = [alerts(only_win).select("url", "sid")] if only_win else []
+    if test_sids:
+        spark = df.sparkSession
+        writes_df = local_df(
+            spark, writes, "sid long, name string, track string, op string, expire int"
         )
+        writer_sids = {w[0] for w in writes}
+        keys.append(
+            _apply_bit_tests(
+                alerts(test_sids), alerts(writer_sids), tests, counts, writes_df, spark
+            )
+        )
+    decided = F.col("sid").isin(sorted(win_sids | test_sids))
+    keys = reduce(DataFrame.unionByName, keys)
+    return staged.where(~decided).unionByName(
+        staged.where(decided).join(keys, ["url", "sid"], "leftsemi")
     )
 
 
@@ -142,8 +142,9 @@ def _apply_bit_tests(
     writes_df: DataFrame,
     spark: SparkSession,
 ) -> DataFrame:
-    """The passing rows of ``tester_src`` under its xbits ``isset`` /
-    ``isnotset`` and flexbits ``count`` tests ([U] src/flexbit.c).
+    """The ``(url, sid)`` keys of the passing rows of ``tester_src``
+    under its xbits ``isset`` / ``isnotset`` and flexbits ``count``
+    tests ([U] src/flexbit.c).
 
     Semantics (fixture-defining, mirrored in :func:`bit_tests_sql`):
     isset / isnotset read the LATEST bit event at-or-before the tester;
@@ -169,9 +170,9 @@ def _apply_bit_tests(
     Testers ride the sweep as NARROW (url, sid) keys (r4: a full-payload
     carry made the hot group's single sort task ~3× wider, and that task
     WAS the stage wall); min(ok) over (url, sid) is the ALL-pass
-    aggregate, and survivors LEFT-SEMI join back to the staged tester
-    scan on that unique, unskewed pair.  The DuckDB oracle keeps the
-    join formulation as an independent cross-check."""
+    aggregate, and the caller joins the passing keys back to the staged
+    rows.  The DuckDB oracle keeps the join formulation as an
+    independent cross-check."""
     tests_df = local_df(
         spark,
         [(sid, name, track, op, None, None) for sid, name, track, op in tests]
@@ -266,14 +267,13 @@ def _apply_bit_tests(
         .when(F.col("cmp") == "lt", F.col("n") < F.col("cval"))
         .otherwise(F.col("n") == F.col("cval"))
     )
-    passed_keys = (
+    return (
         swept.where(F.col("kind") == 1)
         .groupBy("url", "tsid")
         .agg(F.min(ok.cast("int")).alias("_all_ok"))
         .where(F.col("_all_ok") == 1)
         .select("url", F.col("tsid").alias("sid"))
     )
-    return tester_src.join(passed_keys, ["url", "sid"], "leftsemi")
 
 
 def bit_values_sql(rules: list[Rule]) -> tuple[str, str]:

@@ -128,9 +128,8 @@ class Pipeline:
 
     def gated(self, pages: DataFrame) -> DataFrame:
         # ONE staging barrier for the whole gate family: apply_gates
-        # stages the keyed alert stream once, and every window and bit
-        # branch sources its sid subset from that snapshot (see its
-        # docstring for the overlap-only second write).
+        # stages the keyed alert stream once, decides on narrow rows of
+        # that snapshot and joins the decided keys back once.
         pruned = self.enriched(pages).select(*self.GATE_COLS)
         return apply_gates(pruned, self.rules)
 

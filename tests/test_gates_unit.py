@@ -12,6 +12,7 @@ import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
+from sagan_spark.gates.windows import gates_cfg_values_sql, window_gates_sql
 from sagan_spark.gates.xbits import apply_gates, bit_tests_sql
 from sagan_spark.rules.model import AfterGate, Rule, ThresholdGate, XbitOp
 
@@ -271,3 +272,72 @@ def test_bit_tests_match_duckdb_twin(spark, seed):
         n_in = sum(r[0] == sid for r in rows)
         n_kept = sum(s == sid for _, s in got)
         assert 0 < n_kept < n_in, (sid, n_kept, n_in)
+
+
+# Overlap rules: a window gate on a bit writer and on two bit testers,
+# so the window survivors feed both sides of the bit sweep, plus an
+# ungated tester, a window-only rule and a plain rule.
+_OVERLAP_RULES = [
+    Rule(
+        sid=51,
+        xbits=(XbitOp(op="set", name="o", track="by_domain", expire=60),),
+        after=AfterGate(track="by_domain", count=1, seconds=30),
+    ),
+    Rule(
+        sid=52,
+        xbits=(XbitOp(op="isset", name="o", track="by_domain"),),
+        threshold=ThresholdGate(ttype="limit", track="by_domain", count=2, seconds=50),
+    ),
+    Rule(
+        sid=53,
+        xbits=(XbitOp(op="count", name="o", track="by_domain", cmp="gt", value=1),),
+        after=AfterGate(track="by_domain", count=1, seconds=40),
+    ),
+    Rule(sid=54, xbits=(XbitOp(op="isnotset", name="o", track="by_domain"),)),
+    Rule(
+        sid=55,
+        threshold=ThresholdGate(ttype="suppress", track="by_domain", count=3, seconds=60),
+    ),
+    Rule(sid=56),
+]
+
+
+@pytest.mark.parametrize("seed", [1, 2])
+def test_overlapping_gates_match_duckdb_twin(spark, seed):
+    """Window gates on bit writers and testers: the bit sweep reads the
+    window survivors, and the kept (url, sid) set equals the DuckDB
+    twins' window gates followed by their bit tests."""
+    rng = random.Random(seed)
+    sids = [r.sid for r in _OVERLAP_RULES]
+    rows = []
+    for i in range(900):
+        domain = "hot" if rng.random() < 0.7 else f"cold{rng.randrange(12)}"
+        url = f"u{rng.randrange(10**6):06d}-{i}"
+        epoch = rng.randrange(1500)
+        for sid in set(rng.choices(sids, k=rng.randint(1, 3))):
+            rows.append((sid, url, domain, epoch, "10.0.0.1", "192.168.0.1", "s"))
+    out = apply_gates(_frame(spark, rows), _OVERLAP_RULES)
+    got = {(r["url"], r["sid"]) for r in out.select("url", "sid").collect()}
+
+    names = [c.split()[0] for c in COLS.split(", ")]
+    base = pa.table({c: [r[i] for r in rows] for i, c in enumerate(names)})
+    cfg = "after_track after_count after_seconds th_type th_track th_count th_seconds".split()
+    pad = ", ".join(f"NULL AS {c}" for c in _ORACLE_PAD if c not in cfg)
+    with duckdb.connect() as con:
+        con.register("base", base)
+        con.execute(
+            f"CREATE VIEW enr AS SELECT b.*, {pad}, "
+            + ", ".join(f"gcfg.{c}" for c in cfg)
+            + f" FROM base b LEFT JOIN {gates_cfg_values_sql(_OVERLAP_RULES)}"
+            " ON b.sid = gcfg.sid"
+        )
+        con.execute(f"CREATE VIEW wgated AS {window_gates_sql(_OVERLAP_RULES, 'enr')}")
+        sql = f"SELECT url, sid FROM ({bit_tests_sql(_OVERLAP_RULES)})"
+        want = set(con.execute(sql).fetchall())
+    assert got == want
+    # not vacuous: every gated rule keeps some rows and drops others
+    for sid in (51, 52, 53, 54, 55):
+        n_in = sum(r[0] == sid for r in rows)
+        n_kept = sum(s == sid for _, s in got)
+        assert 0 < n_kept < n_in, (sid, n_kept, n_in)
+    assert sum(s == 56 for _, s in got) == sum(r[0] == 56 for r in rows)

@@ -14,7 +14,8 @@ just claimed in docstrings.
     and never a hidden one: no plan reads a Python-list dimension as a PythonRDD
     (``LogicalRDD`` / ``Scan ExistingRDD``), which would re-run Python
     worker tasks on every action — every dimension broadcast builds from
-    a ``LocalTableScan``.
+    a ``LocalTableScan``;
+  * one join-back: the gate stage's plan has one ``Join LeftSemi``.
 """
 
 from __future__ import annotations
@@ -90,6 +91,16 @@ def test_flagship_no_nested_loop_join(spark):
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
     assert "BroadcastHashJoin" in plan  # the dimension joins
+
+
+def test_gates_join_back_once(spark):
+    """The gate stage decides on narrow rows and joins the decided
+    (url, sid) keys back to the staged alert rows in ONE left semi
+    join, window and bit gates together."""
+    pipe = Pipeline(spark)
+    pages = pages_table(spark, SF_DIR, rep=1)
+    plan = pipe.gated(pages)._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("Join LeftSemi") == 1, plan
 
 
 def test_ivf_corpus_side_no_shuffle(spark):
